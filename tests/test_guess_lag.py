@@ -4,11 +4,13 @@ tau grid (FIXTURES.md §4)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from tits_spark.datagen import generate_quotes
-from tits_spark.operators.guess_lag import guess_lag
+from tits_spark.functions import kernels as K
+from tits_spark.operators.guess_lag import _best_lag, guess_lag
 from tits_spark.operators.windows import best_by, first_diff, sliding_last_n, top_k
 
 
@@ -41,6 +43,118 @@ def test_full_correlogram_shape(quotes):
     pdf = out.toPandas()
     per_pair = pdf.groupby(["side", "key1", "key2"]).size()
     assert (per_pair == 33).all()  # 2*nlags + 1
+
+
+def _ref_best(xcf, nlags, tau):
+    """The reference's argmax loop (ref:guess_lag.c:286-304)."""
+    bestl, bestx = 0, xcf[0]
+    for k in range(1, xcf.size):
+        if xcf[k] > bestx:
+            bestx, bestl = xcf[k], k
+    return (float("nan") if np.isnan(bestx) else (bestl - nlags) * tau), bestx
+
+
+def test_best_lag_matches_reference_loop():
+    rng = np.random.default_rng(3)
+    cases = [np.full(9, np.nan), np.array([np.nan, 0.9, 0.1, 0.9]),
+             np.array([0.2, np.nan, 0.7, 0.7, np.nan]), np.array([0.5, 0.5])]
+    for _ in range(200):
+        x = rng.integers(0, 5, 2 * 4 + 1).astype(float) / 4  # ties
+        x[rng.random(x.size) < 0.2] = np.nan
+        cases.append(x)
+    for x in cases:
+        nlags = (x.size - 1) // 2
+        got, want = _best_lag(x, nlags, 0.01), _ref_best(x, nlags, 0.01)
+        np.testing.assert_array_equal(got, want, err_msg=str(x))
+
+
+def _books(pdf, max_ticks):
+    """The bounded books guess_lag scores, built in pandas: the newest
+    ``max_ticks`` rows per (side, venue) in (t, px) order."""
+    t = pdf["ts"].astype("datetime64[us]").astype(np.int64) / 1e6
+    out = {}
+    for side, col in (("BID", "bid"), ("ASK", "ask")):
+        m = pdf[col].notna()
+        b = pd.DataFrame({"venue": pdf["venue"][m], "t": t[m], "px": pdf[col][m]})
+        for venue, g in b.groupby("venue"):
+            g = g.sort_values(["t", "px"]).iloc[-max_ticks:]
+            out[(side, venue)] = (g["t"].to_numpy(), g["px"].to_numpy())
+    return out
+
+
+def test_best_xcf_matches_kernel_on_pandas_books(quotes):
+    """Every pair's best_xcf is K.xcor on the pair's books prepared in
+    pandas: newest edg_ticks of the trigger, rebased to its first ts,
+    first-differenced."""
+    max_ticks, nlags, tau = 4096, 32, 0.01
+    edg, low = 3 * max_ticks // 4 + 1, 2 * max_ticks // 4 + 1
+    books = _books(quotes.toPandas(), max_ticks)
+    want = {}
+    for (side, k1), (t1, p1) in books.items():
+        for (side2, k2), (t2, p2) in books.items():
+            if side2 != side or k1 == k2 or t1.size < edg or t2.size < low:
+                continue
+            t1e, p1e = t1[-edg:], p1[-edg:]
+            xcf = K.xcor(t1e[1:] - t1e[0], np.diff(p1e), t2[1:] - t1e[0],
+                         np.diff(p2), nlags, tau)
+            want[(side, k1, k2)] = _ref_best(xcf, nlags, tau)
+    out = guess_lag(quotes, best=True, max_ticks=max_ticks, nlags=nlags, tau=tau).collect()
+    got = {(r["side"], r["key1"], r["key2"]): (r["best_lag"], r["best_xcf"]) for r in out}
+    assert set(got) == set(want) and len(want) > 0
+    for k, (lag, x) in want.items():
+        assert got[k][0] == pytest.approx(lag, abs=1e-12), k
+        assert got[k][1] == pytest.approx(x, abs=1e-12), k
+
+
+def test_tied_timestamps_do_not_change_result(spark):
+    """Books with equal-ts ticks score the same whatever order the rows
+    reach the scorer in: equal timestamps are ordered by price."""
+    pdf = generate_quotes(spark, n_ticks=3000, seed=5).toPandas()
+    rng = np.random.default_rng(5)
+    for _, idx in pdf.groupby("venue").groups.items():
+        idx = np.asarray(idx)
+        dup = rng.choice(np.arange(1, idx.size), idx.size // 8, replace=False)
+        pdf.loc[idx[dup], "ts"] = pdf.loc[idx[dup - 1], "ts"].to_numpy()
+    schema = "ts timestamp, venue string, bid double, ask double"
+    kw = dict(best=True, max_ticks=4096, edg_ticks=2000, low_ticks=1500,
+              nlags=16, tau=0.01)
+
+    def run(df):
+        return sorted(guess_lag(df, **kw).collect())
+
+    a = run(spark.createDataFrame(pdf, schema))
+    shuffled = pdf.sample(frac=1.0, random_state=9).reset_index(drop=True)
+    b = run(spark.createDataFrame(shuffled, schema).repartition(7))
+    assert len(a) == 12
+    assert a == b
+
+
+def test_no_eligible_book_gives_empty_result(spark):
+    quotes = generate_quotes(spark, n_ticks=200, seed=1)
+    for best, cols in ((True, ["best_lag", "best_xcf"]), (False, ["lag_time", "xcf"])):
+        out = guess_lag(quotes, best=best, max_ticks=4096, nlags=8)
+        assert out.collect() == []
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+            ("side", "string"), ("key1", "string"), ("key2", "string"),
+            (cols[0], "double"), (cols[1], "double"),
+        ]
+
+
+def test_constant_partner_gives_nan_lag(spark):
+    """A constant-price book has zero variance: its XCF is NaN at every
+    lag, so the reference argmax reports a NaN lag, not lag -nlags. The
+    NaN reaches Spark as NULL (Arrow's pandas conversion), as in
+    best_by."""
+    pdf = generate_quotes(spark, n_ticks=3000, seed=8).toPandas()
+    pdf.loc[pdf["venue"] == "FOLA", "bid"] = 10.0
+    quotes = spark.createDataFrame(pdf, "ts timestamp, venue string, bid double, ask double")
+    out = guess_lag(quotes, best=True, max_ticks=4096, edg_ticks=2000,
+                    low_ticks=1500, nlags=8).collect()
+    got = {(r["side"], r["key1"], r["key2"]): r for r in out}
+    assert got[("BID", "LEAD", "FOLA")]["best_lag"] is None
+    assert got[("BID", "LEAD", "FOLA")]["best_xcf"] is None
+    assert np.isfinite(got[("BID", "LEAD", "FOLB")]["best_lag"])
+    assert np.isfinite(got[("ASK", "LEAD", "FOLA")]["best_lag"])
 
 
 def test_sliding_last_n(spark):

@@ -459,10 +459,15 @@ def test_cogroup_and_grouped_udf_numbered_repartition(spark, ev):
     quotes = generate_quotes(spark, n_ticks=500, seed=11)
     gl = guess_lag(quotes, best=True, max_ticks=256, nlags=8, tau=0.01)
     assert gl.rdd.getNumPartitions() == par
-    # two children each repartitioned once; the cogroup itself must not
-    # add a third exchange on top
-    p = plan_of(gl)
-    assert p.count("Exchange hashpartitioning") <= 2 or p.count("Exchange (") <= 4
+    # one hash shuffle (the book window; the broadcast partner side
+    # reuses it), one round-robin shuffle of the pair table, no cogroup
+    gl.collect()
+    p = gl._jdf.queryExecution().executedPlan().toString()
+    final = p.split("== Initial Plan ==")[0]
+    assert final.count("- Exchange hashpartitioning") == 1
+    assert final.count("- ReusedExchange") == 1
+    assert final.count("- Exchange RoundRobinPartitioning") == 1
+    assert "FlatMapCoGroupsInPandas" not in p
 
     df = ev.select(F.col("user_id").alias("k"), "ts", "value")
     assert lttb(df, 10, key_col="k").rdd.getNumPartitions() == par

@@ -34,14 +34,16 @@ sroots/sperio — including the wider 8-lane truncation).
  - "parity" (default): the lane-order-faithful Welford normalization —
    bit-compatible with the C build, used by the golden tests;
  - "fast": vectorized two-pass numpy mean/var (ddof=1) — identical to
-   ~1e-15 relative, no Python-loop over n/4 blocks. The Spark operators
-   default to this (their acceptance gate is the 6-dp DuckDB oracle,
-   far above the 1e-15 difference), keeping the per-series hot path
-   fully vectorized.
+   ~1e-15 relative, no Python-loop over n/4 blocks. The operators in
+   ``operators/correlate.py`` (sacf/xcor/AR/PACF by key) default to
+   this (their acceptance gate is the 6-dp DuckDB oracle, far above the
+   1e-15 difference), keeping the per-series hot path fully vectorized.
+   ``operators/guess_lag.py`` calls ``xcor`` with the "parity" default,
+   so its correlograms match the reference build.
 
 Everything here is plain numpy over contiguous arrays — these functions
-run inside Arrow-batched pandas UDFs (applyInPandas / cogroup), never
-per-row Python.
+run inside Arrow-batched pandas UDFs (applyInPandas / cogroup /
+mapInPandas), never per-row Python.
 """
 
 from __future__ import annotations

@@ -19,9 +19,13 @@ book hits EDG_TICKS rows; a batch job sees one snapshot, so each
 eligible book fires once on its newest EDG_TICKS rows. The planted-lag
 fixture asserts the recovered offsets, not stream replay order.
 
-Scale shape: pair registry is tiny (venues^2) -> broadcast; the heavy
-shuffle is the single cogroup on (side, key1, key2); per-book state is
-bounded by MAX_TICKS, so task memory is O(1) regardless of input size.
+Scale shape: the only heavy shuffle is the bounded-book window on
+(side, venue); the group-by after it folds each book into one row of
+time-ordered arrays without a second exchange. The books self-join on
+side (the partner side broadcast: one row per book) into one row per
+ordered pair, and each pair row crosses to Python once, so Python sees
+no per-tick strings. Per-book state is bounded by MAX_TICKS, so a pair
+row, and the memory of scoring it, is O(1) regardless of input size.
 """
 
 from __future__ import annotations
@@ -46,14 +50,22 @@ _BEST_SCHEMA = "side string, key1 string, key2 string, best_lag double, best_xcf
 
 def melt_books(quotes: DataFrame) -> DataFrame:
     """(ts, venue, bid, ask) -> (side, venue, ts, px); a NULL side simply
-    produces no row (the reference never appends absent fields)."""
-    bid = quotes.filter(F.col("bid").isNotNull()).select(
-        F.lit("BID").alias("side"), "venue", "ts", F.col("bid").alias("px")
-    )
-    ask = quotes.filter(F.col("ask").isNotNull()).select(
-        F.lit("ASK").alias("side"), "venue", "ts", F.col("ask").alias("px")
-    )
-    return bid.unionByName(ask)
+    produces no row (the reference never appends absent fields). One
+    pass over the quotes: each row inlines into its BID and ASK rows."""
+    sides = [
+        F.struct(F.lit(side).alias("side"), "venue", "ts", F.col(col).alias("px"))
+        for side, col in (("BID", "bid"), ("ASK", "ask"))
+    ]
+    return quotes.select(F.inline(F.array(*sides))).filter(F.col("px").isNotNull())
+
+
+def _best_lag(xcf: np.ndarray, nlags: int, tau: float) -> tuple[float, float]:
+    """The reference argmax over a correlogram: the first maximal element
+    wins and a NaN never beats the running best, so a NaN at lag -nlags
+    stays best and yields a NaN lag (ref:guess_lag.c:286-304)."""
+    k = 0 if np.isnan(xcf[0]) else int(np.nanargmax(xcf))
+    best_lag = float("nan") if np.isnan(xcf[k]) else (k - nlags) * tau
+    return best_lag, float(xcf[k])
 
 
 def guess_lag(
@@ -75,88 +87,64 @@ def guess_lag(
     if low_ticks is None:
         low_ticks = 2 * max_ticks // 4 + 1
 
-    books = sliding_last_n(melt_books(quotes), ["side", "venue"], "ts", max_ticks)
-    books = books.select("side", "venue", ts_seconds("ts").alias("t"), "px")
+    # one row per book: its size and its (t, px) series in time order.
+    # The window already hash-partitions on (side, venue), so the
+    # group-by adds no exchange; sorting the (t, px) structs breaks
+    # equal-ts ties by price, whatever order the shuffle delivered.
+    books = (
+        sliding_last_n(melt_books(quotes), ["side", "venue"], "ts", max_ticks)
+        .groupBy("side", "venue")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sort_array(F.collect_list(
+                F.struct(ts_seconds("ts").alias("t"), "px"))).alias("tp"),
+        )
+    )
+    # trigger fires on its newest edg_ticks rows (ref fires at n == EDG)
+    tp1, tp2 = F.slice("tp", -edg_ticks, edg_ticks), F.col("tp")
+    trig = books.filter(F.col("n") >= edg_ticks).select(
+        "side", F.col("venue").alias("key1"),
+        tp1["t"].alias("t1"), tp1["px"].alias("p1"),
+    )
+    part = books.filter(F.col("n") >= low_ticks).select(
+        "side", F.col("venue").alias("key2"),
+        tp2["t"].alias("t2"), tp2["px"].alias("p2"),
+    )
+    # one row per ordered pair: (side, key1, t1, p1, key2, t2, p2)
+    pairs = trig.join(F.broadcast(part), "side").filter(F.col("key1") != F.col("key2"))
 
-    counts = books.groupBy("side", "venue").agg(F.count(F.lit(1)).alias("n"))
-    trig = counts.filter(F.col("n") >= edg_ticks).select(
-        "side", F.col("venue").alias("key1")
-    )
-    part = counts.filter(F.col("n") >= low_ticks).select(
-        "side", F.col("venue").alias("key2"), F.col("n").alias("n2")
-    )
-    pairs = (
-        trig.join(part, "side")
-        .filter(F.col("key1") != F.col("key2"))
-        .select("side", "key1", "key2")
-    )
+    def score(batches):
+        lag_time = np.arange(-nlags, nlags + 1) * tau
+        for pdf in batches:
+            out = []
+            for side, key1, t1, p1, key2, t2, p2 in pdf.itertuples(index=False):
+                tref = t1[0]
+                # first-difference prices; drop the first element of each
+                # book (clean form of ref:guess_lag.c:228-236's synthetic
+                # zero slot)
+                xcf = K.xcor(t1[1:] - tref, np.diff(p1), t2[1:] - tref, np.diff(p2),
+                             nlags, tau)
+                if not best:
+                    out.append(pd.DataFrame({
+                        "side": side, "key1": key1, "key2": key2,
+                        "lag_time": lag_time, "xcf": xcf,
+                    }))
+                    continue
+                best_lag, best_xcf = _best_lag(xcf, nlags, tau)
+                out.append(pd.DataFrame({
+                    "side": [side], "key1": [key1], "key2": [key2],
+                    "best_lag": [best_lag], "best_xcf": [best_xcf],
+                }))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-    b1 = books.alias("b1")
-    b2 = books.alias("b2")
-    side1 = b1.join(
-        F.broadcast(pairs.alias("pp1")),
-        (F.col("b1.side") == F.col("pp1.side")) & (F.col("b1.venue") == F.col("pp1.key1")),
-    ).select(
-        F.col("pp1.side").alias("side"), F.col("pp1.key1").alias("key1"),
-        F.col("pp1.key2").alias("key2"), F.col("b1.t").alias("t"), F.col("b1.px").alias("px"),
-    )
-    side2 = b2.join(
-        F.broadcast(pairs.alias("pp2")),
-        (F.col("b2.side") == F.col("pp2.side")) & (F.col("b2.venue") == F.col("pp2.key2")),
-    ).select(
-        F.col("pp2.side").alias("side"), F.col("pp2.key1").alias("key1"),
-        F.col("pp2.key2").alias("key2"), F.col("b2.t").alias("t"), F.col("b2.px").alias("px"),
-    )
-
-    def run_pair(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cols = ["side", "key1", "key2", "lag_time", "xcf"] if not best else \
-               ["side", "key1", "key2", "best_lag", "best_xcf"]
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=cols)
-        l = left.sort_values("t", kind="stable")
-        r = right.sort_values("t", kind="stable")
-        # trigger fires on its newest edg_ticks rows (ref fires at n == EDG)
-        l = l.iloc[-edg_ticks:]
-        t1 = l["t"].to_numpy(np.float64)
-        t2 = r["t"].to_numpy(np.float64)
-        tref = t1[0]
-        # first-difference prices; drop the first element of each book
-        # (clean form of ref:guess_lag.c:228-236's synthetic zero slot)
-        p1 = np.diff(l["px"].to_numpy(np.float64))
-        p2 = np.diff(r["px"].to_numpy(np.float64))
-        xcf = K.xcor(t1[1:] - tref, p1, t2[1:] - tref, p2, nlags, tau)
-        meta = (l["side"].iloc[0], l["key1"].iloc[0], l["key2"].iloc[0])
-        if not best:
-            lag_time = (np.arange(-nlags, nlags + 1)) * tau
-            return pd.DataFrame({
-                "side": meta[0], "key1": meta[1], "key2": meta[2],
-                "lag_time": lag_time, "xcf": xcf,
-            })
-        # reference argmax: first maximal element wins; NaN -> NaN lag
-        # (ref:guess_lag.c:286-304)
-        bestl = 0
-        bestx = xcf[0]
-        for k in range(1, xcf.size):
-            if xcf[k] > bestx:
-                bestx = xcf[k]
-                bestl = k
-        best_lag = float("nan") if np.isnan(bestx) else (bestl - nlags) * tau
-        return pd.DataFrame({
-            "side": [meta[0]], "key1": [meta[1]], "key2": [meta[2]],
-            "best_lag": [best_lag], "best_xcf": [bestx],
-        })
-
-    # numbered repartition on both cogroup children: the XCF stage is
-    # the most CPU-per-byte stage in the engine (nlags x n kernel per
-    # pair over compact rows), exactly the shape AQE's advisory-size
-    # coalescing serializes onto one task. A numbered repartition is
-    # exempt from coalescing and its HashPartitioning satisfies the
-    # cogroup's clustered distribution on both sides (same keys, same
-    # count), so no second shuffle appears (tests/test_plans.py).
+    # round-robin repartition of the pair table: the XCF scorer is the
+    # most CPU-per-byte stage in the engine (an nlags x n kernel per pair
+    # over one row), exactly the shape AQE's advisory-size coalescing
+    # serializes onto one task. A numbered round-robin repartition is
+    # exempt from coalescing and spreads the pairs evenly over the cores
+    # (tests/test_plans.py).
     nparts = quotes.sparkSession.sparkContext.defaultParallelism
-    keys = ["side", "key1", "key2"]
-    return (
-        side1.repartition(nparts, *keys).groupBy(*keys)
-        .cogroup(side2.repartition(nparts, *keys).groupBy(*keys))
-        .applyInPandas(run_pair, schema=_BEST_SCHEMA if best else _FULL_SCHEMA)
+    return pairs.repartition(nparts).mapInPandas(
+        score, schema=_BEST_SCHEMA if best else _FULL_SCHEMA
     )

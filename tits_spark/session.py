@@ -7,11 +7,12 @@ for skew-join splitting and small-partition coalescing (SURVEY.md §4).
 Round-6 optimization notes (guide §5, §6, §9; OPTIMIZATION_r06.md):
 
  - ``spark.driver.memory``: in local mode the driver JVM *is* every
-   executor; the old 8g heap gave 32 concurrent tasks ~250 MB each and
+   executor; an 8g heap gave 32 concurrent tasks ~250 MB each and
    measurable GC pressure on the hash-agg heavy families. Default is
-   now 32g (the sandbox has 128 GiB; on a real cluster this setting is
-   ignored — executor memory comes from spark-submit). Override with
-   $SPARK_GRAFT_DRIVER_MEM.
+   the smaller of 32g and 40% of the host's physical memory (6g on a
+   16 GB host, where a 32g heap grows until the kernel kills the JVM);
+   on a real cluster this setting is ignored — executor memory comes
+   from spark-submit. Override with $SPARK_GRAFT_DRIVER_MEM.
  - ``spark.local.dir``: shuffle/spill files default to /tmp, which in
    this sandbox is the shared *disk* volume; production deploys put
    them on node-local NVMe. /dev/shm (tmpfs) is the one-box analog of
@@ -37,9 +38,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the sandbox (local[N], 128 GiB). On a real cluster
-# these come from spark-submit conf; shuffle partitions should be
-# ~2-3x total executor cores, and AQE coalesces the excess at runtime.
+
+def _default_driver_mem() -> str:
+    """min(32g, 40% of physical RAM), whole GiB, at least 1g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, int(0.4 * phys) >> 30))}g"
+
+
+# Defaults sized for one local[N] host. On a real cluster these come
+# from spark-submit conf; shuffle partitions should be ~2-3x total
+# executor cores, and AQE coalesces the excess at runtime.
 _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
@@ -50,7 +58,7 @@ _DEFAULTS = {
     # JVM<->Python transfer; per-series kernels want whole groups anyway.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     "spark.sql.shuffle.partitions": "32",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
     "spark.local.dir": os.environ.get(
         "SPARK_GRAFT_LOCAL_DIR", "/dev/shm/tits_spark_local"
     ),
