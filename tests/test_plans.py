@@ -64,6 +64,68 @@ def test_partition_pruning_on_tier_table(spark, transcripts, tmp_path):
     assert "bucket_date" in seg
 
 
+def _final_plans(spark, after: int) -> list[tuple[str, list[tuple[str, str]]]]:
+    """For each SQL execution with an id above ``after``, once all have
+    finished (the status store updates asynchronously): the final
+    adaptive plan's tree as text, and the (name, description) of its
+    nodes (reused exchanges appear in the text only)."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    for _ in range(100):
+        execs = store.executionsList()
+        new = [execs.apply(i) for i in range(execs.size())
+               if execs.apply(i).executionId() > after]
+        if all(e.completionTime().isDefined() for e in new):
+            break
+        time.sleep(0.1)
+    out = []
+    for e in new:
+        nodes = store.planGraph(e.executionId()).allNodes()
+        out.append((
+            e.physicalPlanDescription().split("== Initial Plan ==")[0],
+            [(nodes.apply(i).name(), nodes.apply(i).desc()) for i in range(nodes.size())],
+        ))
+    return out
+
+
+def test_incremental_rollup_one_write_one_append(spark, transcripts, tmp_path):
+    """Committing a new day is one multi-tier write whose final plan
+    scans raw once — one FileScan, the 1h and 1d branches reusing the
+    1m aggregate's exchange — and clusters once on (tier, bucket_date);
+    the lineage rows of all three tiers land as one metrics-log file."""
+    from tits_spark.lineage import incremental_rollup
+
+    src, tiers, metrics = (str(tmp_path / d) for d in ("raw", "tiers", "metrics"))
+    transcripts.select(
+        "conv_id", "ts", F.length("text").cast("double").alias("value")
+    ).write.parquet(src)
+    raw = spark.read.parquet(src)
+    last = raw.agg(F.max(F.to_date("ts"))).first()[0]
+    incremental_rollup(spark, raw.where(F.to_date("ts") < F.lit(last)), tiers, metrics)
+
+    logged = set((tmp_path / "metrics").glob("*.parquet"))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    after = max(execs.apply(i).executionId() for i in range(execs.size()))
+    assert incremental_rollup(spark, raw, tiers, metrics) == {
+        "tier_1m": 1, "tier_1h": 1, "tier_1d": 1,
+    }
+    assert len(set((tmp_path / "metrics").glob("*.parquet")) - logged) == 1
+
+    def clusters_tiers(desc: str) -> bool:
+        return desc.startswith("Exchange hashpartitioning(tier") and "bucket_date" in desc
+
+    writes = [
+        (tree, nodes) for tree, nodes in _final_plans(spark, after)
+        if any(clusters_tiers(d) for _, d in nodes)
+    ]
+    assert len(writes) == 1
+    tree, nodes = writes[0]
+    assert sum(n.startswith("Scan parquet") for n, _ in nodes) == 1
+    assert tree.count("ReusedExchange") == 2  # the 1h and the 1d branch
+    assert sum(clusters_tiers(d) for n, d in nodes if n == "Exchange") == 1
+
+
 def test_xcor_pairs_broadcasts_registry(spark, ev):
     from tits_spark.operators.correlate import xcor_pairs
 

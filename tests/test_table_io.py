@@ -63,6 +63,28 @@ def test_parquet_tier_overwrite_is_per_day(spark, tmp_path):
     assert got[("k1", "2026-01-02")] == (1, 7.0)
 
 
+def test_parquet_multi_tier_write_and_read_back(spark, tmp_path):
+    """write_tiers lands several tiers in one write, one file per
+    (tier, day) directory; read_tiers reads back only the named
+    directories, with a tier column, skipping ones that do not exist."""
+    io = ParquetTableIO(spark, str(tmp_path / "tiers"), str(tmp_path / "metrics"))
+    df = spark.createDataFrame(
+        [("k1", "2026-01-01 10:00:00", 1), ("k1", "2026-01-02 10:00:00", 2)],
+        "key string, bucket_ts string, n_obs long",
+    ).withColumn("bucket_ts", F.to_timestamp("bucket_ts"))
+    io.write_tiers({"1m": df, "1h": df.withColumn("n_obs", F.col("n_obs") * 10)})
+    for tier in ("1m", "1h"):
+        assert io.tier_partition_count(tier) == 2
+        for day in (tmp_path / "tiers" / f"tier={tier}").glob("bucket_date=*"):
+            assert len(list(day.glob("*.parquet"))) == 1
+
+    got = io.read_tiers(df.schema, ["1m", "1h", "1d"], ["2026-01-02", "2026-01-03"])
+    assert sorted((r["tier"], str(r["bucket_date"]), r["n_obs"]) for r in got.collect()) == [
+        ("1h", "2026-01-02", 20), ("1m", "2026-01-02", 2),
+    ]
+    assert io.read_tiers(df.schema, ["1d"], ["2026-01-02"]).count() == 0
+
+
 def test_metrics_log_append_and_first_read(spark, tmp_path):
     io = ParquetTableIO(spark, str(tmp_path / "t"), str(tmp_path / "metrics"))
     assert io.read_metrics().count() == 0  # missing dir -> empty frame

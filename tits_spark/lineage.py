@@ -21,6 +21,14 @@ Without an Iceberg runtime jar, the metrics table doubles as the commit
 log over a plain parquet directory layout (SURVEY.md §7): a partition is
 visible iff a lineage row exists for it, giving exactly-once semantics
 on top of idempotent partition overwrites.
+
+A rollup run commits all its pending days in ONE round: one write of
+the 1m/1h/1d tiers (one dynamic-overwrite job on parquet), one read-back
+of exactly the written (tier, day) partitions, and one append of every
+tier's lineage rows. A crash anywhere before that append leaves the
+round's days uncommitted in every tier, so the rerun recomputes and
+overwrites them (bit-identical); a day that an older per-tier log shows
+committed in some tiers only is likewise recomputed for all three.
 """
 
 from __future__ import annotations
@@ -54,12 +62,17 @@ _TIER_EXPRS = (_CHECKSUM_EXPR, "sum(n_obs)")
 
 
 def _lineage_rows(
-    df: DataFrame, job_id: str, stage: str, checksum_expr: str,
+    df: DataFrame, job_id: str, stage_prefix: str, checksum_expr: str,
     input_count_expr: str,
 ) -> DataFrame:
+    """One lineage row per (tier, day) partition of ``df`` (a read-back
+    with ``tier`` and ``bucket_date`` columns); stage = prefix + tier.
+    Coalesced to one partition: the rows are few and each commit
+    appends one file to the log."""
     return (
-        df.withColumn("part", F.date_format(F.to_date("bucket_ts"), "yyyy-MM-dd"))
-        .groupBy("part")
+        df.groupBy(
+            "tier", F.date_format("bucket_date", "yyyy-MM-dd").alias("part")
+        )
         .agg(
             F.expr(input_count_expr).cast("long").alias("input_count"),
             F.count(F.lit(1)).alias("bucket_count"),
@@ -67,36 +80,60 @@ def _lineage_rows(
         )
         .select(
             F.lit(job_id).alias("job_id"),
-            F.lit(stage).alias("stage"),
+            F.concat(F.lit(stage_prefix), "tier").alias("stage"),
             "part",
             "input_count",
             "bucket_count",
             "checksum",
             F.lit(dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)).alias("committed_at"),
         )
+        .coalesce(1)
     )
 
 
 def _commit(
-    io, df: DataFrame, tier: str, stage: str, job_id: str, pending: list | None,
-    exprs: tuple[str, str] = _TIER_EXPRS,
-) -> DataFrame:
-    """Write ``df`` as ``tier``, read it back, and append the lineage
-    rows of the ``pending`` day (or calendar-bucket) partitions — of
-    every partition on disk when ``pending`` is None. Returns the tier
-    as read back.
+    io, frames: dict[str, DataFrame], job_id: str, pending: list | None,
+    exprs: tuple[str, str] = _TIER_EXPRS, stage_prefix: str = "tier_",
+) -> None:
+    """Commit ``frames`` ({tier: rows}) in one round: one write of every
+    tier, one read-back of the ``pending`` day (or calendar-bucket)
+    partitions of those tiers — of every partition on disk when
+    ``pending`` is None — and one append of the lineage rows computed
+    from that read-back.
 
-    The tier is read back from storage (a cheap columnar scan) instead
-    of caching the shuffle output: lineage checksums then attest what
-    is actually on disk, and a following cascade scans parquet instead
-    of a memory-hungry cached plan (a measured 30%+ win)."""
-    io.write_tier(df, tier)
-    written = io.read_tier(tier).drop("bucket_date")
-    rows = written if pending is None else written.filter(
-        F.to_date("bucket_ts").isin(pending)
-    )
-    io.append_metrics(_lineage_rows(rows, job_id, stage, *exprs))
-    return written
+    The rows are read back from storage (by explicit partition path
+    and the frames' own schema) instead of caching the shuffle output,
+    so lineage checksums attest what is actually on disk. A crash
+    before the append leaves every written partition uncommitted:
+    it is pending in every tier of the round, and the rerun overwrites
+    it."""
+    io.write_tiers(frames)
+    schema = next(iter(frames.values())).schema
+    written = io.read_tiers(schema, list(frames), pending)
+    io.append_metrics(_lineage_rows(written, job_id, stage_prefix, *exprs))
+
+
+def _changed_parts(io, raw: DataFrame, ts: str) -> set[str]:
+    """Committed days whose current raw row count differs from the
+    ``input_count`` of their latest tier_1m lineage row (late data)."""
+    latest_counts = {
+        r["part"]: r["n"]
+        for r in io.read_metrics()
+        .filter(F.col("stage") == "tier_1m")
+        .groupBy("part")
+        .agg(F.max_by("input_count", "committed_at").alias("n"))
+        .collect()
+    }
+    current_counts = {
+        r["day"].strftime("%Y-%m-%d"): r["n"]
+        for r in raw.groupBy(F.to_date(ts).alias("day"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    return {
+        part for part, n in current_counts.items()
+        if part in latest_counts and latest_counts[part] != n
+    }
 
 
 def incremental_rollup(
@@ -112,11 +149,14 @@ def incremental_rollup(
 ) -> dict[str, int]:
     """Run (or resume) the raw -> 1m -> 1h -> 1d cascade.
 
-    Only day-partitions not yet in the metrics log are processed; each
-    processed tier-partition gets a lineage row. Storage resolves via
-    TableIO — parquet directories here, Iceberg tables when
-    ``tiers_path`` is a dotted identifier and the runtime jar is on the
-    classpath. Returns {stage: n_partitions_processed}.
+    Only day-partitions not yet in the metrics log (in any tier) are
+    processed, through all three tiers in one commit round (see
+    ``_commit``): raw is aggregated to 1m once, 1h and 1d derive from
+    that aggregate in the same plan, one write lands the three tiers
+    and one append logs a lineage row per processed tier-partition.
+    Storage resolves via TableIO — parquet directories here, Iceberg
+    tables when ``tiers_path`` is a dotted identifier and the runtime
+    jar is on the classpath. Returns {stage: n_partitions_processed}.
 
     ``backfill=True`` additionally detects LATE DATA: committed days
     whose current raw row count no longer matches the lineage log's
@@ -133,85 +173,47 @@ def incremental_rollup(
     """
     job_id = job_id or uuid.uuid4().hex[:12]
     io = resolve_table_io(spark, tiers_path, metrics_path)
-    processed: dict[str, int] = {}
 
     committed_all = {
         (r["stage"], r["part"])
         for r in io.read_metrics().select("stage", "part").distinct().collect()
     }
-    if not committed_all:
-        # fresh run: nothing committed, everything pending — skip the
-        # day-discovery scan of the input entirely
-        present_days: list = []
-    else:
+    # fresh run: nothing committed, every day is pending — skip the
+    # day-discovery scan of the input entirely
+    pending_days = present_days = None
+    if committed_all:
         # one scan: the set of day-partitions present in the input
         present_days = sorted(
             r["day"]
             for r in raw.select(F.to_date(ts).alias("day")).distinct().collect()
         )
-
-    changed_parts: set[str] = set()
-    if backfill and committed_all:
-        latest_counts = {
-            r["part"]: r["n"]
-            for r in io.read_metrics()
-            .filter(F.col("stage") == "tier_1m")
-            .groupBy("part")
-            .agg(F.max_by("input_count", "committed_at").alias("n"))
-            .collect()
-        }
-        current_counts = {
-            r["day"].strftime("%Y-%m-%d"): r["n"]
-            for r in raw.groupBy(F.to_date(ts).alias("day"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        changed_parts = {
-            part for part, n in current_counts.items()
-            if part in latest_counts and latest_counts[part] != n
-        }
-
-    fresh = not committed_all
-    prev_tier: DataFrame | None = None
-    for tier in TIER_ORDER:
-        stage = f"tier_{tier}"
-        pending_days = present_days if fresh else [
+        changed_parts = _changed_parts(io, raw, ts) if backfill else set()
+        # a day pending in ANY tier (e.g. a log written by an older
+        # per-tier protocol that crashed between tiers) is recomputed
+        # for all three
+        pending_days = [
             d for d in present_days
-            if (stage, d.strftime("%Y-%m-%d")) not in committed_all
-            or d.strftime("%Y-%m-%d") in changed_parts
+            if d.strftime("%Y-%m-%d") in changed_parts
+            or any((f"tier_{t}", d.strftime("%Y-%m-%d")) not in committed_all
+                   for t in TIER_ORDER)
         ]
-        if not fresh and not pending_days:
-            processed[stage] = 0
-            prev_tier = None  # nothing new; later tiers read from disk
-            continue
+        if not pending_days:
+            return {f"tier_{t}": 0 for t in TIER_ORDER}
 
-        # fresh-run fast path: when every present day is pending, skip
-        # the per-row day membership filter entirely (it costs a full
-        # column evaluation over the raw scan for no selectivity)
-        full = fresh or len(pending_days) == len(present_days)
-        if tier == "1m":
-            src = raw if full else raw.filter(F.to_date(ts).isin(pending_days))
-            cur = rollup_from_raw(src, key, ts, value, tier)
-        else:
-            if prev_tier is None:
-                finer = TIER_ORDER[TIER_ORDER.index(tier) - 1]
-                prev_tier = io.read_tier(finer).drop("bucket_date")
-            src = prev_tier if full else prev_tier.filter(
-                F.to_date("bucket_ts").isin(pending_days)
-            )
-            cur = rollup_cascade(src, tier)
-        # next tier must see the WHOLE finer tier (its own pending set may
-        # be wider after a crash between tier commits): _commit returns
-        # it unfiltered
-        prev_tier = _commit(
-            io, cur, tier, stage, job_id, None if full else pending_days
-        )
-        if fresh:
-            # day count from the written partition directories (no scan)
-            processed[stage] = io.tier_partition_count(tier)
-        else:
-            processed[stage] = len(pending_days)
-    return processed
+    # when every present day is pending, skip the per-row day membership
+    # filter (a full column evaluation over the raw scan for no
+    # selectivity)
+    full = pending_days is None or len(pending_days) == len(present_days)
+    src = raw if full else raw.filter(F.to_date(ts).isin(pending_days))
+    # 1h and 1d derive from the 1m aggregate inside the same plan: exact
+    # (associative aggregates, nested buckets), and raw is scanned once
+    m1 = rollup_from_raw(src, key, ts, value, "1m")
+    frames = {t: m1 if t == "1m" else rollup_cascade(m1, t) for t in TIER_ORDER}
+    _commit(io, frames, job_id, pending_days)
+    if pending_days is None:
+        # day count from the written partition directories (no scan)
+        return {f"tier_{t}": io.tier_partition_count(t) for t in TIER_ORDER}
+    return {f"tier_{t}": len(pending_days) for t in TIER_ORDER}
 
 
 def _cal_start(day: dt.date, unit: str) -> dt.date:
@@ -289,7 +291,7 @@ def incremental_calendar(
         F.date_trunc(unit, "bucket_ts").cast("date").isin(sorted(pending))
     )
     _commit(
-        io, rollup_cascade(src, unit), unit, stage, job_id,
+        io, {unit: rollup_cascade(src, unit)}, job_id,
         None if full else sorted(pending),
     )
     return {stage: len(pending)}
@@ -490,7 +492,7 @@ def incremental_sketches(
             continue
         full = len(pending) == len(present_days)
         src = raw if full else raw.filter(F.to_date(ts).isin(pending))
-        _commit(io, build(stage, src), stage, stage, job_id,
-                None if full else pending, exprs)
+        _commit(io, {stage: build(stage, src)}, job_id,
+                None if full else pending, exprs, stage_prefix="")
         processed[stage] = len(pending)
     return processed

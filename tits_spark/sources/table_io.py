@@ -12,10 +12,18 @@ tested default; the Iceberg backend activates only when BOTH hold:
 Both backends expose the same contract, so `tits_spark.lineage` and the
 spark-submit jobs are storage-agnostic:
 
- - ``read_tier(tier)`` / ``write_tier(df, tier)`` —
-   idempotent per-day replace: parquet uses dynamic partition
-   overwrite, Iceberg uses ``writeTo().overwritePartitions()`` (the
-   same replace-matching-partitions semantics, transactional).
+ - ``write_tiers({tier: df, ...})`` — idempotent per-(tier, day)
+   replace of every day present in each frame: parquet writes all the
+   tiers in ONE dynamic-partition-overwrite job at the tiers root
+   (``partitionBy("tier", "bucket_date")``), Iceberg runs one
+   ``writeTo().overwritePartitions()`` per tier table (the same
+   replace-matching-partitions semantics, transactional per table).
+   ``write_tier(df, tier)`` is ``write_tiers({tier: df})``.
+ - ``read_tier(tier)`` — a whole tier; ``read_tiers(schema, tiers,
+   days)`` — only the given (tier, day) partitions, with a ``tier``
+   column, read by explicit path with the caller's schema (the root
+   holds tiers of different schemas, e.g. sketch tiers next to the
+   rollup tiers, so nothing infers a schema there).
  - ``tier_partition_count(tier)`` — number of day partitions on disk.
  - ``read_metrics()`` / ``append_metrics(df)`` — append-only lineage
    log. On parquet the log doubles as the commit protocol (a partition
@@ -23,17 +31,19 @@ spark-submit jobs are storage-agnostic:
    idempotent overwrites); on Iceberg each append is a table commit.
 
 This module is the only owner of the tier layout: rows are clustered
-onto bucket_date before every tier write, so each day's file is written
-whole by one task — no tasks-x-dates sliver files (measured 3.6x slower
-at bench scale, and pathological at 10^12 turns).
+onto (tier, bucket_date) before every tier write, so each day's file is
+written whole by one task — no tasks-x-dates sliver files (measured
+3.6x slower at bench scale, and pathological at 10^12 turns).
 """
 
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StringType, StructType
 
 METRICS_SCHEMA = (
     "job_id string, stage string, part string, input_count long, "
@@ -57,8 +67,15 @@ def is_table_identifier(location: str) -> bool:
     return "/" not in location and bool(_IDENT_RE.fullmatch(location))
 
 
-def _cluster_for_write(df: DataFrame) -> DataFrame:
-    return df.withColumn("bucket_date", F.to_date("bucket_ts")).repartition("bucket_date")
+def _with_bucket_date(df: DataFrame) -> DataFrame:
+    return df.withColumn("bucket_date", F.to_date("bucket_ts"))
+
+
+def _union_tiers(frames: dict[str, DataFrame]) -> DataFrame:
+    return reduce(
+        DataFrame.unionByName,
+        (df.withColumn("tier", F.lit(t)) for t, df in frames.items()),
+    )
 
 
 class ParquetTableIO:
@@ -73,14 +90,44 @@ class ParquetTableIO:
     def read_tier(self, tier: str) -> DataFrame:
         return self.spark.read.parquet(f"{self.tiers_root}/tier={tier}")
 
-    def write_tier(self, df: DataFrame, tier: str) -> None:
+    def read_tiers(
+        self, schema: StructType, tiers: list[str], days: list | None = None
+    ) -> DataFrame:
+        """Rows of the ``days`` partitions of ``tiers`` (of the whole
+        tiers when ``days`` is None) plus ``tier`` and ``bucket_date``
+        columns. Lists only those directories; a (tier, day) directory
+        that does not exist contributes no rows."""
+        dirs = [f"{self.tiers_root}/tier={t}" for t in tiers]
+        if days is not None:
+            dirs = [f"{d}/bucket_date={day}" for d in dirs for day in days]
+        path = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = path(self.tiers_root).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        dirs = [d for d in dirs if fs.exists(path(d))]
+        full = (
+            StructType(schema.fields)
+            .add("tier", StringType())
+            .add("bucket_date", DateType())
+        )
+        if not dirs:
+            return self.spark.createDataFrame([], full)
+        return (
+            self.spark.read.schema(full)
+            .option("basePath", self.tiers_root)
+            .parquet(*dirs)
+        )
+
+    def write_tiers(self, frames: dict[str, DataFrame]) -> None:
         (
-            _cluster_for_write(df)
+            _with_bucket_date(_union_tiers(frames))
+            .repartition("tier", "bucket_date")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_date")
-            .parquet(f"{self.tiers_root}/tier={tier}")
+            .partitionBy("tier", "bucket_date")
+            .parquet(self.tiers_root)
         )
+
+    def write_tier(self, df: DataFrame, tier: str) -> None:
+        self.write_tiers({tier: df})
 
     def tier_partition_count(self, tier: str) -> int:
         import glob
@@ -117,14 +164,23 @@ class IcebergTableIO:
     def read_tier(self, tier: str) -> DataFrame:
         return self.spark.table(self._tier_table(tier))
 
+    def read_tiers(
+        self, schema: StructType, tiers: list[str], days: list | None = None
+    ) -> DataFrame:
+        out = _union_tiers({t: self.read_tier(t) for t in tiers})
+        return out if days is None else out.where(F.col("bucket_date").isin(days))
+
+    def write_tiers(self, frames: dict[str, DataFrame]) -> None:
+        for tier, df in frames.items():
+            out = _with_bucket_date(df).repartition("bucket_date")
+            name = self._tier_table(tier)
+            if self.spark.catalog.tableExists(name):
+                out.writeTo(name).overwritePartitions()
+            else:
+                out.writeTo(name).using("iceberg").partitionedBy(F.col("bucket_date")).create()
+
     def write_tier(self, df: DataFrame, tier: str) -> None:
-        out = _cluster_for_write(df)
-        name = self._tier_table(tier)
-        writer = out.writeTo(name).using("iceberg").partitionedBy(F.col("bucket_date"))
-        if self.spark.catalog.tableExists(name):
-            out.writeTo(name).overwritePartitions()
-        else:
-            writer.create()
+        self.write_tiers({tier: df})
 
     def tier_partition_count(self, tier: str) -> int:
         return (
