@@ -82,6 +82,13 @@ def _books(pdf, max_ticks):
     return out
 
 
+def _want_xcf(books, side, k1, k2, edg, nlags, tau):
+    """K.xcor of one ordered pair on books prepared in pandas."""
+    (t1, p1), (t2, p2) = books[(side, k1)], books[(side, k2)]
+    t1, p1 = t1[-edg:], p1[-edg:]
+    return K.xcor(t1[1:] - t1[0], np.diff(p1), t2[1:] - t1[0], np.diff(p2), nlags, tau)
+
+
 def test_best_xcf_matches_kernel_on_pandas_books(quotes):
     """Every pair's best_xcf is K.xcor on the pair's books prepared in
     pandas: newest edg_ticks of the trigger, rebased to its first ts,
@@ -90,13 +97,11 @@ def test_best_xcf_matches_kernel_on_pandas_books(quotes):
     edg, low = 3 * max_ticks // 4 + 1, 2 * max_ticks // 4 + 1
     books = _books(quotes.toPandas(), max_ticks)
     want = {}
-    for (side, k1), (t1, p1) in books.items():
-        for (side2, k2), (t2, p2) in books.items():
+    for (side, k1), (t1, _) in books.items():
+        for (side2, k2), (t2, _) in books.items():
             if side2 != side or k1 == k2 or t1.size < edg or t2.size < low:
                 continue
-            t1e, p1e = t1[-edg:], p1[-edg:]
-            xcf = K.xcor(t1e[1:] - t1e[0], np.diff(p1e), t2[1:] - t1e[0],
-                         np.diff(p2), nlags, tau)
+            xcf = _want_xcf(books, side, k1, k2, edg, nlags, tau)
             want[(side, k1, k2)] = _ref_best(xcf, nlags, tau)
     out = guess_lag(quotes, best=True, max_ticks=max_ticks, nlags=nlags, tau=tau).collect()
     got = {(r["side"], r["key1"], r["key2"]): (r["best_lag"], r["best_xcf"]) for r in out}
@@ -127,6 +132,57 @@ def test_tied_timestamps_do_not_change_result(spark):
     b = run(spark.createDataFrame(shuffled, schema).repartition(7))
     assert len(a) == 12
     assert a == b
+
+
+def test_tie_at_max_ticks_cutoff_keeps_the_same_ticks(spark):
+    """When equal timestamps straddle the max_ticks cutoff, the book keeps
+    the newest ticks in (ts, px) order whatever order the rows arrive in:
+    shuffled and repartitioned copies score as the pandas books do."""
+    pdf = generate_quotes(spark, n_ticks=3000, seed=5).toPandas()
+    for _, idx in pdf.groupby("venue").groups.items():
+        idx = np.asarray(idx)  # half of each venue's ticks share a ts
+        pdf.loc[idx[1::2], "ts"] = pdf.loc[idx[0:-1:2], "ts"].to_numpy()
+    schema = "ts timestamp, venue string, bid double, ask double"
+    max_ticks, nlags, tau = 1000, 16, 0.01
+    edg = 3 * max_ticks // 4 + 1
+    books = _books(pdf, max_ticks)
+    want = {(s, k1, k2): _ref_best(_want_xcf(books, s, k1, k2, edg, nlags, tau), nlags, tau)
+            for (s, k1) in books for (s2, k2) in books if s == s2 and k1 != k2}
+    for seed in (None, 1, 2, 3):
+        frame = pdf if seed is None else pdf.sample(frac=1.0, random_state=seed)
+        df = spark.createDataFrame(frame.reset_index(drop=True), schema)
+        out = guess_lag(df if seed is None else df.repartition(7), best=True,
+                        max_ticks=max_ticks, nlags=nlags, tau=tau).collect()
+        got = {(r["side"], r["key1"], r["key2"]): (r["best_lag"], r["best_xcf"]) for r in out}
+        assert set(got) == set(want) and len(want) == 12
+        for k, (lag, x) in want.items():
+            assert got[k][0] == pytest.approx(lag, abs=1e-12), (seed, k)
+            assert got[k][1] == pytest.approx(x, abs=1e-12), (seed, k)
+
+
+def test_null_prices_do_not_count_toward_book_bound(spark):
+    """NULL asks never enter a book, so they take no place under its
+    max_ticks bound: an ASK book with interleaved NULL asks scores its
+    newest max_ticks non-NULL asks."""
+    pdf = generate_quotes(spark, n_ticks=3000, seed=6).toPandas()
+    lead = pdf.index[pdf["venue"] == "LEAD"]
+    pdf.loc[lead[::3], "ask"] = np.nan
+    max_ticks, nlags, tau = 1500, 8, 0.01
+    edg = 3 * max_ticks // 4 + 1
+    books = _books(pdf, max_ticks)
+    assert pdf.loc[lead, "ask"].notna().sum() > max_ticks  # cutoff inside the book
+    quotes = spark.createDataFrame(pdf, "ts timestamp, venue string, bid double, ask double")
+    out = guess_lag(quotes, best=False, max_ticks=max_ticks, nlags=nlags, tau=tau)
+    out = out.where("side = 'ASK'").toPandas()
+    pairs = out.groupby(["key1", "key2"])
+    assert {k for k in pairs.groups} == {
+        (k1, k2) for k1 in ("LEAD", "FOLA", "FOLB") for k2 in ("LEAD", "FOLA", "FOLB") if k1 != k2
+    }
+    for (k1, k2), g in pairs:
+        np.testing.assert_allclose(
+            g.sort_values("lag_time")["xcf"].to_numpy(),
+            _want_xcf(books, "ASK", k1, k2, edg, nlags, tau), rtol=0, atol=1e-12,
+        )
 
 
 def test_no_eligible_book_gives_empty_result(spark):

@@ -114,6 +114,22 @@ def test_lineage_counts(spark, raw, tmp_path):
         assert n == n_raw, stage
 
 
+def test_fresh_run_on_uri_root_reports_committed_days(spark, raw, tmp_path):
+    """On ``file://`` roots a fresh run reports, per tier, the days its
+    lineage log committed (the count goes through the Hadoop
+    FileSystem, not a local glob)."""
+    tiers, metrics = (tmp_path / "tiers").as_uri(), (tmp_path / "metrics").as_uri()
+    assert tiers.startswith("file:///")
+    got = incremental_rollup(spark, raw, tiers, metrics, job_id="u")
+    log = resolve_table_io(spark, tiers, metrics).read_metrics()
+    want = {
+        r["stage"]: r["n"]
+        for r in log.groupBy("stage").agg(F.countDistinct("part").alias("n")).collect()
+    }
+    assert got == want
+    assert all(n > 0 for n in got.values())
+
+
 def test_backfill_reprocesses_changed_days(spark, raw, tmp_path):
     tiers = str(tmp_path / "tiers")
     metrics = str(tmp_path / "metrics")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -521,15 +522,18 @@ def test_cogroup_and_grouped_udf_numbered_repartition(spark, ev):
     quotes = generate_quotes(spark, n_ticks=500, seed=11)
     gl = guess_lag(quotes, best=True, max_ticks=256, nlags=8, tau=0.01)
     assert gl.rdd.getNumPartitions() == par
-    # one hash shuffle (the book window; the broadcast partner side
-    # reuses it), one round-robin shuffle of the pair table, no cogroup
+    # one book window and its hash shuffle on (side, venue), one small
+    # hash shuffle on side (the books of a side into one row), one
+    # round-robin shuffle of the pair table; no join, no cogroup
     gl.collect()
     p = gl._jdf.queryExecution().executedPlan().toString()
     final = p.split("== Initial Plan ==")[0]
-    assert final.count("- Exchange hashpartitioning") == 1
-    assert final.count("- ReusedExchange") == 1
+    assert final.count("- Window [") == 1
+    hashed = re.findall(r"- Exchange hashpartitioning\((.*?), \d+\)", final)
+    assert sorted(re.sub(r"#\d+", "", k) for k in hashed) == ["side", "side, venue"]
     assert final.count("- Exchange RoundRobinPartitioning") == 1
-    assert "FlatMapCoGroupsInPandas" not in p
+    for op in ("BroadcastExchange", "ReusedExchange", "Join", "FlatMapCoGroupsInPandas"):
+        assert op not in p, op
 
     df = ev.select(F.col("user_id").alias("k"), "ts", "value")
     assert lttb(df, 10, key_col="k").rdd.getNumPartitions() == par

@@ -9,7 +9,10 @@ relies on.
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
 from tits_spark.sources.table_io import (
     IcebergTableIO,
@@ -96,6 +99,24 @@ def test_metrics_log_append_and_first_read(spark, tmp_path):
     io.append_metrics(rows)
     io.append_metrics(rows)
     assert io.read_metrics().count() == 2
+
+
+def test_metrics_read_failure_on_existing_log_propagates(spark, tmp_path, monkeypatch):
+    """Only a missing log reads as empty: a failed read of a log that
+    exists raises, instead of looking like nothing was committed."""
+    io = ParquetTableIO(spark, str(tmp_path / "t"), str(tmp_path / "metrics"))
+    io.append_metrics(spark.createDataFrame(
+        [("j1", "tier_1m", "2026-01-01", 10, 3, 42, None)],
+        "job_id string, stage string, part string, input_count long, "
+        "bucket_count long, checksum long, committed_at timestamp",
+    ))
+
+    def failing_read(self, *paths, **kw):
+        raise AnalysisException(message="injected read failure")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_read)
+    with pytest.raises(AnalysisException, match="injected read failure"):
+        io.read_metrics()
 
 
 def test_iceberg_table_names():

@@ -21,11 +21,15 @@ fixture asserts the recovered offsets, not stream replay order.
 
 Scale shape: the only heavy shuffle is the bounded-book window on
 (side, venue); the group-by after it folds each book into one row of
-time-ordered arrays without a second exchange. The books self-join on
-side (the partner side broadcast: one row per book) into one row per
-ordered pair, and each pair row crosses to Python once, so Python sees
-no per-tick strings. Per-book state is bounded by MAX_TICKS, so a pair
-row, and the memory of scoring it, is O(1) regardless of input size.
+(t, px) arrays without a second exchange. A small shuffle on side then
+gathers a side's books (one row per venue) into one row, and one
+generator expression expands that row into one row per ordered pair, so
+each book is built once and nothing is joined. Each pair row crosses to
+Python once, so Python sees no per-tick strings. Per-book state is
+bounded by MAX_TICKS, so a pair row, and the memory of scoring it, is
+O(1) regardless of input size; a side row holds its V books, and one
+task per side generates its V(V-1) pairs before the round-robin
+repartition spreads them.
 """
 
 from __future__ import annotations
@@ -35,8 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from tits_spark.functions import kernels as K
-from tits_spark.functions.exprs import ts_seconds
-from tits_spark.operators.windows import sliding_last_n
 
 MAX_TICKS = 4096                     # ref:guess_lag.c:81
 EDG_TICKS = 3 * MAX_TICKS // 4 + 1   # ref:guess_lag.c:242
@@ -52,11 +54,10 @@ def melt_books(quotes: DataFrame) -> DataFrame:
     """(ts, venue, bid, ask) -> (side, venue, ts, px); a NULL side simply
     produces no row (the reference never appends absent fields). One
     pass over the quotes: each row inlines into its BID and ASK rows."""
-    sides = [
-        F.struct(F.lit(side).alias("side"), "venue", "ts", F.col(col).alias("px"))
-        for side, col in (("BID", "bid"), ("ASK", "ask"))
-    ]
-    return quotes.select(F.inline(F.array(*sides))).filter(F.col("px").isNotNull())
+    return quotes.selectExpr(
+        "inline(array(struct('BID' AS side, venue, ts, bid AS px), "
+        "struct('ASK' AS side, venue, ts, ask AS px)))"
+    ).where("px IS NOT NULL")
 
 
 def _best_lag(xcf: np.ndarray, nlags: int, tau: float) -> tuple[float, float]:
@@ -87,31 +88,39 @@ def guess_lag(
     if low_ticks is None:
         low_ticks = 2 * max_ticks // 4 + 1
 
-    # one row per book: its size and its (t, px) series in time order.
-    # The window already hash-partitions on (side, venue), so the
-    # group-by adds no exchange; sorting the (t, px) structs breaks
-    # equal-ts ties by price, whatever order the shuffle delivered.
+    # The bounded-book window on (side, venue) is the only heavy shuffle.
+    # It orders by (ts, px), as the books are sorted below, so equal
+    # timestamps straddling the cutoff keep the same ticks whatever order
+    # the shuffle delivered. NULL prices were dropped by melt_books
+    # before it and never count toward the bound.
+    top = (
+        melt_books(quotes)
+        .selectExpr("*", "row_number() OVER "
+                    "(PARTITION BY side, venue ORDER BY ts DESC, px DESC) AS rn")
+        .where(f"rn <= {max_ticks}")
+    )
+    # one row per book, (venue, t[], px[]) in (t, px) order (the group-by
+    # reuses the window's partitioning), then one row per side holding
+    # its books; t is exprs.ts_seconds
     books = (
-        sliding_last_n(melt_books(quotes), ["side", "venue"], "ts", max_ticks)
-        .groupBy("side", "venue")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sort_array(F.collect_list(
-                F.struct(ts_seconds("ts").alias("t"), "px"))).alias("tp"),
-        )
+        top.groupBy("side", "venue")
+        .agg(F.expr("sort_array(collect_list(struct("
+                    "CAST(CAST(ts AS TIMESTAMP) AS DOUBLE) AS t, px))) AS tp"))
+        .groupBy("side")
+        .agg(F.expr("collect_list(struct(venue, tp.t AS t, tp.px AS px)) AS bs"))
     )
-    # trigger fires on its newest edg_ticks rows (ref fires at n == EDG)
-    tp1, tp2 = F.slice("tp", -edg_ticks, edg_ticks), F.col("tp")
-    trig = books.filter(F.col("n") >= edg_ticks).select(
-        "side", F.col("venue").alias("key1"),
-        tp1["t"].alias("t1"), tp1["px"].alias("p1"),
+    # one row per ordered pair (side, key1, t1, p1, key2, t2, p2): each
+    # trigger with >= edg_ticks rows fires on its newest edg_ticks (the
+    # reference fires at n == EDG) against every other book of its side
+    # with >= low_ticks rows
+    e = f"-{edg_ticks}, {edg_ticks}"
+    pairs = books.selectExpr(
+        "side",
+        f"inline(flatten(transform(filter(bs, a -> size(a.t) >= {edg_ticks}), "
+        f"a -> transform(filter(bs, b -> size(b.t) >= {low_ticks} AND b.venue != a.venue), "
+        f"b -> struct(a.venue AS key1, slice(a.t, {e}) AS t1, slice(a.px, {e}) AS p1, "
+        "b.venue AS key2, b.t AS t2, b.px AS p2)))))",
     )
-    part = books.filter(F.col("n") >= low_ticks).select(
-        "side", F.col("venue").alias("key2"),
-        tp2["t"].alias("t2"), tp2["px"].alias("p2"),
-    )
-    # one row per ordered pair: (side, key1, t1, p1, key2, t2, p2)
-    pairs = trig.join(F.broadcast(part), "side").filter(F.col("key1") != F.col("key2"))
 
     def score(batches):
         lag_time = np.arange(-nlags, nlags + 1) * tau

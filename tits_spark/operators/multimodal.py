@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata, processed by Arrow-batched mapInPandas.
 
-The decode step is STUBBED (no image/audio libraries in this container,
-clearly marked below); everything Spark-side is real and tested:
-schemas, batch shapes, partition-size control for fat binary rows, and
-the deterministic fake feature extractor used to validate the plumbing
-end to end.
+There is no decode step (no image/audio codec library is installed):
+``_fake_feature`` stands in for decode->embed. Everything Spark-side is
+real and tested: schemas, batch shapes, partition-size control for fat
+binary rows, and the deterministic fake feature extractor used to
+validate the plumbing end to end.
 """
 
 from __future__ import annotations
@@ -43,13 +43,6 @@ def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
             payload,
         ))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """STUB — real implementation needs an image codec (PIL/cv2), which
-    is not available in this container. The Spark plumbing around it is
-    real; swap this function body on a cluster with codecs installed."""
-    raise NotImplementedError("image decode requires PIL/cv2 (not in container)")
 
 
 def _fake_feature(payload: bytes, dim: int = 8) -> np.ndarray:

@@ -47,11 +47,6 @@ def _norm(a):
     )
 
 
-def with_cosine(pairs: DataFrame, a: str = "emb_a", b: str = "emb_b") -> DataFrame:
-    ca, cb = F.col(a), F.col(b)
-    return pairs.withColumn("cosine", _dot(ca, cb) / (_norm(ca) * _norm(cb)))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -43,17 +43,6 @@ def first_diff(
     )
 
 
-def rebase_time(
-    df: DataFrame, keys: Sequence[str], ts: str, out: str = "t_rel"
-) -> DataFrame:
-    """Seconds since the first observation of each key (W3)."""
-    from tits_spark.functions.exprs import ts_seconds
-
-    w = Window.partitionBy(*keys)
-    t = ts_seconds(ts)
-    return df.withColumn(out, t - F.min(t).over(w))
-
-
 def top_k(
     df: DataFrame, keys: Sequence[str], order_col: str, k: int, desc: bool = True
 ) -> DataFrame:

@@ -41,6 +41,7 @@ from __future__ import annotations
 import re
 from functools import reduce
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StringType, StructType
@@ -87,6 +88,12 @@ class ParquetTableIO:
         self.tiers_root = tiers_root
         self.metrics_root = metrics_root
 
+    def _fs(self, location: str):
+        """(Hadoop ``Path`` class, the FileSystem of ``location``): works
+        on local paths and URI roots (``file://``, ``hdfs://``) alike."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path
+        return path, path(location).getFileSystem(self.spark._jsc.hadoopConfiguration())
+
     def read_tier(self, tier: str) -> DataFrame:
         return self.spark.read.parquet(f"{self.tiers_root}/tier={tier}")
 
@@ -100,8 +107,7 @@ class ParquetTableIO:
         dirs = [f"{self.tiers_root}/tier={t}" for t in tiers]
         if days is not None:
             dirs = [f"{d}/bucket_date={day}" for d in dirs for day in days]
-        path = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = path(self.tiers_root).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        path, fs = self._fs(self.tiers_root)
         dirs = [d for d in dirs if fs.exists(path(d))]
         full = (
             StructType(schema.fields)
@@ -130,14 +136,20 @@ class ParquetTableIO:
         self.write_tiers({tier: df})
 
     def tier_partition_count(self, tier: str) -> int:
-        import glob
-
-        return len(glob.glob(f"{self.tiers_root}/tier={tier}/bucket_date=*"))
+        path, fs = self._fs(self.tiers_root)
+        found = fs.globStatus(path(f"{self.tiers_root}/tier={tier}/bucket_date=*"))
+        return 0 if found is None else len(found)
 
     def read_metrics(self) -> DataFrame:
         try:
             return self.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_root)
-        except Exception:  # noqa: BLE001 — missing dir on first run
+        except AnalysisException:
+            # only a log that does not exist yet (first run) reads as
+            # empty; any other failure must not look like "nothing
+            # committed", which would recompute and overwrite every day
+            path, fs = self._fs(self.metrics_root)
+            if fs.exists(path(self.metrics_root)):
+                raise
             return self.spark.createDataFrame([], METRICS_SCHEMA)
 
     def append_metrics(self, rows: DataFrame) -> None:
