@@ -136,20 +136,31 @@ def test_xcor_pairs_broadcasts_registry(spark, ev):
     assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
 
 
-def test_gapfill_reuses_partitioning(spark, ev):
-    from tits_spark.operators.gapfill import gapfill_locf
+def test_gapfill_reuses_partitioning(spark, ev, tmp_path):
+    from tits_spark.operators.gapfill import gapfill_interp, gapfill_locf
     from tits_spark.operators.rollup import rollup_from_raw
+    from tits_spark.sources.table_io import ParquetTableIO
 
-    t1h = rollup_from_raw(
-        ev.select(F.col("user_id").alias("key"), "ts", "value"),
-        "key", "ts", "value", "1h",
+    store = ParquetTableIO(spark, str(tmp_path), str(tmp_path))
+    store.write_tier(
+        rollup_from_raw(
+            ev.select(F.col("user_id").alias("key"), "ts", "value"),
+            "key", "ts", "value", "1h",
+        ),
+        "1h",
     )
-    p = plan_of(gapfill_locf(t1h, "1h"))
-    # LOCF = spine join + one window; beyond the rollup's own exchange we
-    # tolerate the join pair + window sort but no gratuitous extras
-    assert p.count("Exchange (") <= 5
-    # no Python appears anywhere in the gap-fill plan
-    assert "Python" not in p and "BatchEvalPython" not in p
+    t1h = store.read_tier("1h")
+    for fill in (gapfill_locf, gapfill_interp):
+        p = plan_of(fill(t1h, "1h"))
+        # one window pass over the stored rows: a single shuffle on key,
+        # no spine aggregate and no join back to the observations
+        assert "Join" not in p and "Aggregate" not in p, fill.__name__
+        assert p.count("Window (") == 1, fill.__name__
+        assert p.count("Exchange (") == 1, fill.__name__
+        hashed = re.findall(r"Arguments: hashpartitioning\((.*?), \d+\)", p)
+        assert [re.sub(r"#\d+L?", "", k) for k in hashed] == ["key"], fill.__name__
+        # no Python appears anywhere in the gap-fill plan
+        assert "Python" not in p and "BatchEvalPython" not in p
 
 
 def test_two_phase_agg_matches_single(spark, transcripts):

@@ -9,6 +9,8 @@ relies on.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
@@ -86,6 +88,37 @@ def test_parquet_multi_tier_write_and_read_back(spark, tmp_path):
         ("1h", "2026-01-02", 20), ("1m", "2026-01-02", 2),
     ]
     assert io.read_tiers(df.schema, ["1d"], ["2026-01-02"]).count() == 0
+
+
+def test_read_tier_day_range(spark, tmp_path):
+    """read_tier keeps only the day directories in range; a range with
+    none returns an empty frame with the tier schema, and a tier with no
+    directories at all raises as Spark's own listing does."""
+    io = ParquetTableIO(spark, str(tmp_path / "tiers"), str(tmp_path / "metrics"))
+    with pytest.raises(AnalysisException):
+        io.read_tier("1h")
+    df = spark.createDataFrame(
+        [("k1", "2026-01-01 10:00:00", 1), ("k1", "2026-01-02 10:00:00", 2),
+         ("k1", "2026-01-03 10:00:00", 3)],
+        "key string, bucket_ts string, n_obs long",
+    ).withColumn("bucket_ts", F.to_timestamp("bucket_ts"))
+    io.write_tier(df, "1h")
+
+    def n_obs(out):
+        return sorted(r["n_obs"] for r in out.collect())
+
+    whole = io.read_tier("1h")
+    assert whole.schema == spark.read.parquet(str(tmp_path / "tiers" / "tier=1h")).schema
+    assert n_obs(whole) == [1, 2, 3]
+    d = dt.date
+    assert n_obs(io.read_tier("1h", d(2026, 1, 2), d(2026, 1, 2))) == [2]
+    assert n_obs(io.read_tier("1h", d(2026, 1, 2))) == [2, 3]
+    assert n_obs(io.read_tier("1h", last_day=d(2026, 1, 2))) == [1, 2]
+    empty = io.read_tier("1h", d(2027, 1, 1), d(2027, 1, 31))
+    assert empty.count() == 0
+    assert empty.schema == whole.schema
+    with pytest.raises(AnalysisException):
+        io.read_tier("1d", d(2026, 1, 1), d(2026, 1, 3))
 
 
 def test_metrics_log_append_and_first_read(spark, tmp_path):

@@ -13,6 +13,7 @@ from tits_spark.operators.rollup import (
     choose_tier,
     read_resolution,
     rollup_all_tiers,
+    with_derived,
 )
 from tits_spark.sources.table_io import ParquetTableIO
 
@@ -61,6 +62,48 @@ def test_read_resolution_prunes_and_matches(spark, transcripts, tmp_path):
     plan = buf.getvalue()
     seg = plan.split("PartitionFilters", 1)[1][:250]
     assert "bucket_date" in seg
+
+
+@contextlib.contextmanager
+def _jobs_in_group(spark, group):
+    """Collects the ids of the Spark jobs submitted under job group
+    ``group`` while the block runs (after the listener bus drains)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_read_resolution_builds_without_a_job(spark, transcripts, tmp_path, scheme):
+    """Building read_resolution's frame lists the day directories and
+    reads one footer through Hadoop: no listing or schema-inference job,
+    on a local root and on a URI root; the rows equal the cascade."""
+    raw = transcripts.select(
+        "conv_id", "ts", F.length("text").cast("double").alias("value")
+    )
+    tiers = rollup_all_tiers(raw)
+    root = scheme + str(tmp_path / "tiers")
+    ParquetTableIO(spark, root, root).write_tiers(tiers)
+
+    lo = raw.agg(F.min("ts")).first()[0]
+    start = lo.replace(hour=0, minute=0, second=0, microsecond=0)
+    end = start + dt.timedelta(days=2)
+    with _jobs_in_group(spark, f"read_resolution:{scheme}") as jobs:
+        out = read_resolution(spark, root, start, end, target_points=24)
+    assert jobs == []
+
+    want = with_derived(tiers["1h"]).where(
+        (F.col("bucket_ts") >= F.lit(start)) & (F.col("bucket_ts") < F.lit(end))
+    )
+    got = sorted(out.select(*want.columns).collect())
+    assert got == sorted(want.collect())
+    assert len(got) > 0
 
 
 def test_choose_tier_calendar():

@@ -124,10 +124,14 @@ def rollup_cascade(tier_df: DataFrame, to: str) -> DataFrame:
 
 
 def with_derived(tier_df: DataFrame) -> DataFrame:
-    """Attach non-associative derived stats (mean, sample variance)."""
-    n, s, ss = F.col("n_obs"), F.col("v_sum"), F.col("v_sumsq")
-    var = F.when(n > 1, (ss - s * s / n) / (n - F.lit(1))).otherwise(F.lit(None))
-    return tier_df.withColumn("v_mean", s / n).withColumn("v_var", var)
+    """Attach non-associative derived stats (mean, sample variance) in
+    one projection, written as SQL text: every DataFrame column call is
+    a py4j round trip, and a dashboard query pays them per query."""
+    return tier_df.selectExpr(
+        "*",
+        "v_sum / n_obs AS v_mean",
+        "CASE WHEN n_obs > 1 THEN (v_sumsq - v_sum * v_sum / n_obs) / (n_obs - 1) END AS v_var",
+    )
 
 
 def rollup_all_tiers(
@@ -232,19 +236,22 @@ def read_resolution(
     derived: bool = True,
     calendar: tuple = (),
 ) -> DataFrame:
-    """Read the right tier for a time range + target resolution, with
-    partition pruning doing the heavy lifting: the bucket_date filter
-    reaches the parquet partition columns, so a 1-day slice of a year
-    of 1m data scans one directory, not 365. Returns the tier rows
-    (plus derived mean/var unless ``derived=False``) restricted to
+    """Read the right tier for a time range + target resolution.
+    Only the tier's ``bucket_date=`` directories from ``start.date()``
+    to ``end.date()`` are read, listed through Hadoop with the schema
+    taken from a file footer, so building the frame submits no Spark
+    job (``table_io.read_tier``); the bucket_date predicates still
+    reach the scan's partition filters. Returns the tier rows (plus
+    derived mean/var unless ``derived=False``) restricted to
     [start, end). Pass ``calendar=("month",)`` etc. when those tiers
     are maintained (rollup_job --calendar) to let multi-year ranges
     route to them."""
     tier = choose_tier(start, end, target_points, calendar=calendar)
-    df = resolve_table_io(spark, tiers_path, tiers_path).read_tier(tier)
+    df = resolve_table_io(spark, tiers_path, tiers_path).read_tier(
+        tier, start.date(), end.date()
+    )
     out = df.where(
-        (F.col("bucket_date") >= F.lit(start.date()))
-        & (F.col("bucket_date") <= F.lit(end.date()))
+        F.expr(f"bucket_date BETWEEN DATE'{start.date()}' AND DATE'{end.date()}'")
         & (F.col("bucket_ts") >= F.lit(start))
         & (F.col("bucket_ts") < F.lit(end))
     )

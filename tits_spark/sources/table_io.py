@@ -19,12 +19,20 @@ spark-submit jobs are storage-agnostic:
    ``writeTo().overwritePartitions()`` per tier table (the same
    replace-matching-partitions semantics, transactional per table).
    ``write_tier(df, tier)`` is ``write_tiers({tier: df})``.
- - ``read_tier(tier)`` — a whole tier; ``read_tiers(schema, tiers,
-   days)`` — only the given (tier, day) partitions, with a ``tier``
-   column, read by explicit path with the caller's schema (the root
-   holds tiers of different schemas, e.g. sketch tiers next to the
-   rollup tiers, so nothing infers a schema there).
- - ``tier_partition_count(tier)`` — number of day partitions on disk.
+ - ``read_tier(tier, first_day=None, last_day=None)`` — one tier with
+   its ``bucket_date`` column, only the days in [first_day, last_day]
+   when given. Parquet lists ``tier=<t>/bucket_date=*`` once through
+   the Hadoop FileSystem, keeps the directories in range and takes the
+   schema from one file footer (the Spark schema the writer stored
+   there), so building the frame submits no Spark job; Iceberg filters
+   on ``bucket_date``. The range only prunes: callers keep their own
+   row predicates. ``read_tiers(schema, tiers, days)`` — only the
+   given (tier, day) partitions, with a ``tier`` column, read by
+   explicit path with the caller's schema (the root holds tiers of
+   different schemas, e.g. sketch tiers next to the rollup tiers, so
+   nothing infers a schema there).
+ - ``tier_partition_count(tier)`` — number of day partitions on disk
+   (the same ``bucket_date=*`` listing as ``read_tier``).
  - ``read_metrics()`` / ``append_metrics(df)`` — append-only lineage
    log. On parquet the log doubles as the commit protocol (a partition
    is visible iff its lineage row exists — exactly-once on top of
@@ -38,6 +46,7 @@ written whole by one task — no tasks-x-dates sliver files (measured
 
 from __future__ import annotations
 
+import json
 import re
 from functools import reduce
 
@@ -50,6 +59,9 @@ METRICS_SCHEMA = (
     "job_id string, stage string, part string, input_count long, "
     "bucket_count long, checksum long, committed_at timestamp"
 )
+
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*){1,2}")
 
@@ -94,8 +106,55 @@ class ParquetTableIO:
         path = self.spark._jvm.org.apache.hadoop.fs.Path
         return path, path(location).getFileSystem(self.spark._jsc.hadoopConfiguration())
 
-    def read_tier(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(f"{self.tiers_root}/tier={tier}")
+    def _day_dirs(self, tier: str) -> list[str]:
+        """Paths of the tier's ``bucket_date=<d>`` directories, from one
+        Hadoop FileSystem glob (no Spark job)."""
+        path, fs = self._fs(self.tiers_root)
+        found = fs.globStatus(path(f"{self.tiers_root}/tier={tier}/bucket_date=*"))
+        base = f"{self.tiers_root}/tier={tier}"
+        return [] if found is None else [f"{base}/{s.getPath().getName()}" for s in found]
+
+    def _footer_schema(self, dirs: list[str]) -> StructType | None:
+        """The row schema Spark's writer stored in the footer of the
+        first data file under ``dirs``, read through Hadoop (no job);
+        None when no such file carries one."""
+        parquet = self.spark._jvm.org.apache.parquet.hadoop
+        conf = self.spark._jsc.hadoopConfiguration()
+        path, fs = self._fs(self.tiers_root)
+        for d in dirs:
+            for f in fs.listStatus(path(d)):
+                if f.getPath().getName().startswith(("_", ".")):  # .crc, _SUCCESS
+                    continue
+                reader = parquet.ParquetFileReader.open(
+                    parquet.util.HadoopInputFile.fromPath(f.getPath(), conf)
+                )
+                try:
+                    meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+                finally:
+                    reader.close()
+                stored = meta.get(_SPARK_SCHEMA_KEY)
+                return None if stored is None else StructType.fromJson(json.loads(stored))
+        return None
+
+    def read_tier(self, tier: str, first_day=None, last_day=None) -> DataFrame:
+        """The tier's rows and ``bucket_date``, from the day directories
+        in [first_day, last_day] (either bound may be None). A tier with
+        no Spark-written day directory falls back to Spark's own
+        listing and inference, which raises on a missing tier."""
+        base = f"{self.tiers_root}/tier={tier}"
+        dirs = self._day_dirs(tier)
+        schema = self._footer_schema(dirs)
+        if schema is None:
+            return self.spark.read.parquet(base)
+        schema.add("bucket_date", DateType())
+        keep = [
+            d for d in dirs
+            if (first_day is None or d.rsplit("=", 1)[1] >= str(first_day))
+            and (last_day is None or d.rsplit("=", 1)[1] <= str(last_day))
+        ]
+        if not keep:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", base).parquet(*keep)
 
     def read_tiers(
         self, schema: StructType, tiers: list[str], days: list | None = None
@@ -136,9 +195,7 @@ class ParquetTableIO:
         self.write_tiers({tier: df})
 
     def tier_partition_count(self, tier: str) -> int:
-        path, fs = self._fs(self.tiers_root)
-        found = fs.globStatus(path(f"{self.tiers_root}/tier={tier}/bucket_date=*"))
-        return 0 if found is None else len(found)
+        return len(self._day_dirs(tier))
 
     def read_metrics(self) -> DataFrame:
         try:
@@ -173,8 +230,13 @@ class IcebergTableIO:
     def _tier_table(self, tier: str) -> str:
         return f"{self.prefix}_{tier}"
 
-    def read_tier(self, tier: str) -> DataFrame:
-        return self.spark.table(self._tier_table(tier))
+    def read_tier(self, tier: str, first_day=None, last_day=None) -> DataFrame:
+        out = self.spark.table(self._tier_table(tier))
+        if first_day is not None:
+            out = out.where(F.col("bucket_date") >= F.lit(first_day))
+        if last_day is not None:
+            out = out.where(F.col("bucket_date") <= F.lit(last_day))
+        return out
 
     def read_tiers(
         self, schema: StructType, tiers: list[str], days: list | None = None
