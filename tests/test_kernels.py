@@ -297,7 +297,7 @@ def test_sacf_fast_stats_close_and_faster():
 
 def test_regular_fast_path_matches_banded_scan():
     """The regular-grid diagonal collapse (_band_corr_regular) must agree
-    with the generic delta-sorted scan (_band_corr_multi) — same data,
+    with the generic lag-binned scan (_band_corr_multi) — same data,
     both strategies, 1e-10 relative."""
     n1, n2 = 1024, 700
     rng = np.random.Generator(np.random.PCG64(11))
@@ -409,3 +409,82 @@ def test_band_corr_multi_chunk_cap_recursion():
     finally:
         K._BAND_PAIR_CAP = old
     assert np.allclose(a[0], b[0], rtol=1e-12) and np.allclose(a[1], b[1], rtol=1e-12)
+
+
+# ------------------------------------------------- integer lag-bin order
+
+def test_band_edges_match_single_lag_bit_for_bit():
+    """Pairs whose delta equals k - thresh or k + thresh exactly, or sits
+    one ulp either side, get the membership of the per-pair comparison
+    ``k - thresh <= delta < k + thresh`` (and of _band_corr). With unit
+    weights (xf=0, vf=1) and y2 = distinct powers of two, nsums encodes
+    the member set exactly."""
+    thresh = 0.75
+    lags = list(range(-3, 4))
+    edges = [k + s * thresh for k in lags for s in (-1, 1)]
+    t2 = np.unique(np.concatenate([
+        edges, np.nextafter(edges, -np.inf), np.nextafter(edges, np.inf)]))
+    t1 = np.array([0.0])
+    y1 = np.array([1.0])
+    y2 = 2.0 ** np.arange(t2.size)
+    ns, ds = K._band_corr_multi(lags, t1, y1, t2, y2, thresh, 0.0, 1.0, np.float64)
+    for i, k in enumerate(lags):
+        member = (k - thresh <= t2) & (t2 < k + thresh)
+        assert ns[i] == y2[member].sum() and ds[i] == member.sum()
+        n1, d1 = K._band_corr(float(k), t1, y1, t2, y2, thresh, 0.0, 1.0)
+        assert (ns[i], ds[i]) == (n1, d1)
+
+
+def test_lag_bins_widen_past_int16(monkeypatch):
+    """A bin count above the int16 range takes int32 keys, and the sums
+    still match the per-lag scan."""
+    keys = []
+    lag_bins = K._lag_bins
+
+    def spy(x, base, nbins):
+        out = lag_bins(x, base, nbins)
+        keys.append(out.dtype)
+        return out
+
+    monkeypatch.setattr(K, "_lag_bins", spy)
+    rng = np.random.Generator(np.random.PCG64(21))
+    y1 = rng.standard_normal(60)
+    y2 = rng.standard_normal(50)
+    for thresh, key in ((2.5, np.int16), (20_000.0, np.int32)):
+        t1 = np.sort(rng.uniform(0, 3 * thresh, 60))
+        t2 = np.sort(rng.uniform(0, 3 * thresh, 50))
+        keys.clear()
+        lags = list(range(-4, 5))
+        h = thresh / 5.0
+        xf, vf = -1.0 / (2.0 * h * h), 1.0 / np.sqrt(2.0 * np.pi * h)
+        ns, ds = K._band_corr_multi(lags, t1, y1, t2, y2, thresh, xf, vf, np.float64)
+        assert keys and set(keys) == {np.dtype(key)}
+        for i, k in enumerate(lags):
+            n1, d1 = K._band_corr(float(k), t1, y1, t2, y2, thresh, xf, vf)
+            assert abs(ns[i] - n1) <= 1e-12 * max(1.0, abs(n1))
+            assert abs(ds[i] - d1) <= 1e-12 * max(1.0, abs(d1))
+
+
+@pytest.mark.parametrize("seed", [31, 32, 33])
+@pytest.mark.parametrize("shape", ["sacf", "xcor"])
+def test_binned_lags_match_single_lag_scan(shape, seed):
+    """The chunked, lag-binned dispatcher equals the per-lag scan within
+    1e-12 on random irregular pairs, at the sacf (self, lags 1..n) and
+    xcor (cross, lags -n..n) shapes."""
+    rng = np.random.Generator(np.random.PCG64(seed))
+    t1 = np.sort(rng.uniform(0, 400, 600))
+    y1 = rng.standard_normal(600)
+    if shape == "sacf":
+        t2, y2, lags = t1, y1, list(range(1, 41))
+    else:
+        t2 = np.sort(rng.uniform(-20, 380, 450))
+        y2 = rng.standard_normal(450)
+        lags = list(range(-40, 41))
+    h, xf, vf = K._kernel_consts(min(K.meandiff(t1), K.meandiff(t2)), np.float64)
+    thresh = h * 5.0
+    assert K._band_corr_lattice(lags, t1, y1, t2, y2, thresh, xf, vf, np.float64) is None
+    ns, ds = K._band_corr_lags(lags, t1, y1, t2, y2, thresh, xf, vf, np.float64)
+    for i, k in enumerate(lags):
+        n1, d1 = K._band_corr(float(k), t1, y1, t2, y2, thresh, xf, vf)
+        assert abs(ns[i] - n1) <= 1e-12 * max(1.0, abs(n1))
+        assert abs(ds[i] - d1) <= 1e-12 * max(1.0, abs(d1))

@@ -16,7 +16,11 @@ These are independent re-implementations (not copies) of the math in
    h = 0.25 * (mean_dt / tau), band = +-5h, K = exp(-d^2/(2h^2)) /
    sqrt(2*pi*h) (ref:sacf.c:117-148);
  - monotone two-pointer band sweep == np.searchsorted on the sorted
-   rescaled time axis (ref:sacf.c:166-179, xcor.c:166-179);
+   rescaled time axis (ref:sacf.c:166-179, xcor.c:166-179); all lags
+   share one union band of (i, j) pairs, ordered by integer half-lag
+   bin of their delta (a stable radix sort of int16 keys, not a float
+   sort of the deltas), so each lag is one contiguous slice and only
+   its two edge bins take the exact float band test;
  - Levinson-Durbin ACF->AR per ITU-T G.729 with early termination on
    |E| <= eps (ref:acf24ar.c:48-73);
  - Laguerre iteration + Horner deflation for polynomial roots, real
@@ -329,10 +333,11 @@ def _band_corr_lattice(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
 
 
 def _band_corr_lags(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
-    """Dispatch: lattice (regular-with-gaps) collapse when safe, else the delta-sorted
-    union-band scan, chunked so each chunk's union stays within ~12
-    band-widths of lag range (amortizes sort/build without letting the
-    union balloon past the in-band work)."""
+    """Dispatch: lattice (regular-with-gaps) collapse when safe, else the
+    lag-binned union-band scan (:func:`_band_corr_multi`), chunked so each
+    chunk's union stays within ~12 band-widths of lag range (amortizes
+    the bin sort and build without letting the union balloon past the
+    in-band work)."""
     out = _band_corr_lattice(lags, t1, y1, t2, y2, thresh, xf, vf, dtype)
     if out is not None:
         return out
@@ -349,6 +354,21 @@ def _band_corr_lags(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
     return np.concatenate(ns_parts), np.concatenate(ds_parts)
 
 
+def _lag_bins(x, base, nbins: int) -> np.ndarray:
+    """Half-lag bin of each delta: ``floor(2 * (x - base))`` clipped to
+    ``[0, nbins)``, as int16 keys (numpy's stable sort is a radix sort
+    at that width) or int32 when ``nbins`` exceeds the int16 range.
+
+    Every step is monotone in ``x``, so a delta whose bin lies strictly
+    between the bins of a band's two float edges is strictly inside the
+    band whatever the rounding; only the two edge bins need the exact
+    test. ``x`` and ``base`` must share the dtype the deltas use."""
+    key = np.int16 if nbins <= np.iinfo(np.int16).max else np.int32
+    b = np.floor((x - base) * 2)
+    np.clip(b, 0, nbins - 1, out=b)
+    return b.astype(key)
+
+
 def _band_corr_multi(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
     """All lags of the banded Gaussian-weighted sums in one pass.
 
@@ -356,16 +376,21 @@ def _band_corr_multi(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
     i.e. an *interval in delta = t2j - t1i*: ``k - thresh <= delta <
     k + thresh``.  So: materialize the union band over [lags[0],
     lags[-1]] once (ragged searchsorted ranges, ref:xcor.c:166-179's
-    cursor == the per-row bounds), sort the pairs by delta, and every
-    lag becomes a *contiguous slice* of the sorted arrays — no per-lag
-    searchsorted over n needles, no index gathers, no masks; per-lag
-    work is exactly the in-band pairs (exp + dot), matching the C
-    two-pointer's element count.  Returns (nsums, dsums) arrays.
+    cursor == the per-row bounds), order the pairs by integer half-lag
+    bin of delta (:func:`_lag_bins`, a stable radix sort), and every lag
+    becomes a *contiguous slice* of the binned arrays: the bins from its
+    lower edge's to its upper edge's, located by ``bincount`` offsets.
+    Pairs inside the interior bins are in band by construction; the pairs
+    of the two edge bins that fail the exact float test get zero weight,
+    so membership is exactly the per-pair comparison above.  Per-lag work
+    is the in-band pairs plus at most two half-lag bins (exp + dot).
+    Returns (nsums, dsums) arrays.
 
     ``lags`` must be ascending (sacf: 1..nlags, xcor: -nlags..nlags).
-    Only the summation *order* differs from the per-lag scan (sorted by
-    delta instead of row-major), a ~1e-15 relative reordering effect;
-    C-golden parity is asserted at rtol=1e-10 in tests/test_kernels.py.
+    Only the summation *order* differs from the per-lag scan (by bin,
+    then row-major, instead of row-major), a ~1e-15 relative reordering
+    effect; C-golden parity is asserted at rtol=1e-10 in
+    tests/test_kernels.py.
     """
     dt = np.dtype(dtype).type
     nl = len(lags)
@@ -390,17 +415,32 @@ def _band_corr_multi(lags, t1, y1, t2, y2, thresh, xf, vf, dtype):
     jj = np.repeat(lo_n - np.concatenate(([0], np.cumsum(cnt)[:-1])), cnt) + np.arange(total)
     delta = t2[jj] - np.repeat(t1, cnt)
     w = np.repeat(y1, cnt) * y2[jj]
-    order = np.argsort(delta)  # introsort; tie order is irrelevant
+    kks = np.asarray(lags, dtype=dtype)
+    lo_edge = kks - thresh
+    hi_edge = kks + thresh
+    base = lo_edge[0]
+    nbins = int(np.floor((hi_edge[-1] - base) * 2)) + 2
+    bins = _lag_bins(delta, base, nbins)
+    order = np.argsort(bins, kind="stable")
     delta = delta[order]
-    w = np.ascontiguousarray(w[order])
-    for idx, k in enumerate(lags):
-        kk = dt(k)
-        lo = int(np.searchsorted(delta, kk - thresh, side="left"))
-        hi = int(np.searchsorted(delta, kk + thresh, side="left"))
+    w = w[order]
+    off = np.zeros(nbins + 1, dtype=np.int64)
+    np.cumsum(np.bincount(bins, minlength=nbins), out=off[1:])
+    b_lo = _lag_bins(lo_edge, base, nbins)
+    b_hi = _lag_bins(hi_edge, base, nbins)
+    for idx in range(nl):
+        lo = int(off[b_lo[idx]])
+        hi = int(off[b_hi[idx] + 1])
         if lo == hi:
             continue
+        kk = kks[idx]
         d = kk - delta[lo:hi]
         K = vf * np.exp(xf * d * d)
+        # exact edge tests, on the edge bins only
+        e = int(off[b_lo[idx] + 1]) - lo
+        K[:e][delta[lo:lo + e] < lo_edge[idx]] = 0
+        e = int(off[b_hi[idx]]) - lo
+        K[e:][delta[lo + e:hi] >= hi_edge[idx]] = 0
         nsums[idx] = K @ w[lo:hi]
         dsums[idx] = K.sum()
     return nsums, dsums

@@ -30,6 +30,14 @@ bounded by MAX_TICKS, so a pair row, and the memory of scoring it, is
 O(1) regardless of input size; a side row holds its V books, and one
 task per side generates its V(V-1) pairs before the round-robin
 repartition spreads them.
+
+Scoring runs ``defaultParallelism`` Python tasks, and each Python task
+pays a fixed start before its first pair. Part of it is the worker's
+per-task ``importlib.invalidate_caches()``: on CPython 3.10-3.12 it
+re-reads every zip archive on the worker's path (100-300 ms per task)
+unless the package's import hook (``tits_spark/__init__.py``) is
+installed, which limits it to archives that changed. More scoring tasks
+than cores buy nothing but more of these starts.
 """
 
 from __future__ import annotations

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tits_spark.functions.exprs import epoch_us, floordiv
-
 
 def m4_downsample(
     df: DataFrame,
@@ -38,32 +36,29 @@ def m4_downsample(
 
     Columns: key, bucket_ts, n_obs, ts_first, v_first, ts_last, v_last,
     v_min, ts_vmin, v_max, ts_vmax.
+
+    The plan is built from SQL text, so each expression is one py4j call
+    rather than one per column method; the bucket is ``floordiv(epoch_us(
+    ts), width_us)`` of ``functions/exprs.py`` written out.
     """
     if width_sec <= 0:
         raise ValueError("m4: width_sec must be positive")
-    width_us = width_sec * 1_000_000
-    bkt = floordiv(epoch_us(ts), width_us)
+    w = width_sec * 1_000_000
+    us = f"CAST(CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) * 1000000 AS BIGINT)"
     g = (
-        df.where(F.col(value).isNotNull() & F.col(ts).isNotNull())
-        .groupBy(F.col(key).alias("key"), bkt.alias("bkt"))
+        df.where(f"{value} IS NOT NULL AND {ts} IS NOT NULL")
+        .groupBy(F.expr(f"{key} AS key"),
+                 F.expr(f"CAST(({us} - ((({us} % {w}) + {w}) % {w})) / {w} AS BIGINT) AS bkt"))
         .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.min(F.struct(F.col(ts).alias("t"), F.col(value).alias("v"))).alias("s1"),
-            F.max(F.struct(F.col(ts).alias("t"), F.col(value).alias("v"))).alias("s2"),
-            F.min(F.struct(F.col(value).alias("v"), F.col(ts).alias("t"))).alias("s3"),
-            F.max(F.struct(F.col(value).alias("v"), F.col(ts).alias("t"))).alias("s4"),
+            F.expr("count(1) AS n_obs"),
+            F.expr(f"min(struct({ts} AS t, {value} AS v)) AS s1"),
+            F.expr(f"max(struct({ts} AS t, {value} AS v)) AS s2"),
+            F.expr(f"min(struct({value} AS v, {ts} AS t)) AS s3"),
+            F.expr(f"max(struct({value} AS v, {ts} AS t)) AS s4"),
         )
     )
-    return g.select(
-        "key",
-        F.timestamp_micros(F.col("bkt") * width_us).alias("bucket_ts"),
-        "n_obs",
-        F.col("s1.t").alias("ts_first"),
-        F.col("s1.v").alias("v_first"),
-        F.col("s2.t").alias("ts_last"),
-        F.col("s2.v").alias("v_last"),
-        F.col("s3.v").alias("v_min"),
-        F.col("s3.t").alias("ts_vmin"),
-        F.col("s4.v").alias("v_max"),
-        F.col("s4.t").alias("ts_vmax"),
+    return g.selectExpr(
+        "key", f"timestamp_micros(bkt * {w}) AS bucket_ts", "n_obs",
+        "s1.t AS ts_first", "s1.v AS v_first", "s2.t AS ts_last", "s2.v AS v_last",
+        "s3.v AS v_min", "s3.t AS ts_vmin", "s4.v AS v_max", "s4.t AS ts_vmax",
     )
