@@ -83,3 +83,24 @@ def test_only_touched_dates_rewritten(spark, events, tmp_path):
         for f in os.listdir(untouched) if f.endswith(".parquet")
     )
     assert after == before  # untouched partition not rewritten
+
+
+def test_merge_on_uri_root_max_merges_same_day(spark, tmp_path):
+    """A file:// table root must be seen as existing, so the second
+    batch max-merges into the day instead of replacing it."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 3, 5, 9, 0)
+    schema = "ts timestamp, item string"
+    b1 = spark.createDataFrame(
+        [(t0 + dt.timedelta(seconds=i % 60), f"a{i}") for i in range(400)], schema)
+    b2 = spark.createDataFrame(
+        [(t0 + dt.timedelta(seconds=i % 60), f"b{i}") for i in range(400)], schema)
+    tbl = (tmp_path / "tbl").as_uri()
+    assert tbl.startswith("file:///")
+    merge_registers_batch(b1, tbl, "1m", 8, "ts", "item")
+    merge_registers_batch(b2, tbl, "1m", 8, "ts", "item")
+    got = _regs(spark.read.parquet(tbl).select("bucket_ts", "reg", "rho"))
+    want = _regs(distinct_registers(b1.unionByName(b2), "ts", "item", "1m", 8))
+    assert got == want
+    assert got != _regs(distinct_registers(b2, "ts", "item", "1m", 8))

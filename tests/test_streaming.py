@@ -24,7 +24,7 @@ def test_stream_rollup_matches_batch(spark, transcripts, tmp_path):
 
     q = stream_rollup_1m(
         spark, src, "conv_id string, ts timestamp, value double",
-        out, ckpt, watermark="0 seconds", available_now=True,
+        out, ckpt, watermark="0 seconds",
     )
     q.awaitTermination(300)
 
@@ -72,6 +72,30 @@ def test_stream_rollup_incremental_second_batch(spark, transcripts, tmp_path):
     )
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_stream_guess_lag_raises_on_unreadable_books(spark, tmp_path):
+    """Only a missing book table starts the books afresh: a book table
+    that exists but cannot be read fails the query and is left as is."""
+    from pyspark.errors import StreamingQueryException
+
+    from tits_spark.datagen import generate_quotes
+    from tits_spark.streaming.guess_lag_stream import stream_guess_lag
+
+    src = str(tmp_path / "src")
+    generate_quotes(spark, n_ticks=400, seed=3).write.mode("overwrite").parquet(src)
+    books = tmp_path / "books"
+    books.mkdir()
+    (books / "part-00000.parquet").write_bytes(b"not a parquet file")
+
+    q = stream_guess_lag(
+        spark, src, books_path=str(books),
+        results_path=str(tmp_path / "results"),
+        checkpoint=str(tmp_path / "ckpt"), max_ticks=256, nlags=16,
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    assert sorted(f.name for f in books.iterdir()) == ["part-00000.parquet"]
 
 
 def test_book_state_triggers(spark, tmp_path):

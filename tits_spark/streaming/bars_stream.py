@@ -26,7 +26,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 _US = 1_000_000
 
@@ -138,35 +140,10 @@ def stream_bars_atr_rsi(
     checkpoint: str,
     bucket_secs: int = 3600,
     n: int = 14,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) samples into finalized OHLC bars with
     TR/ATR/RSI attached."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files: with availableNow
-        # the backlog then drains as MANY micro-batches (the soak
-        # harness uses this to drive a 50-batch run, tools/stream_soak)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_bars_fn(bucket_secs, n),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_bars_fn(bucket_secs, n), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

@@ -8,9 +8,9 @@ micro-batch corrupts the conformance score through a DIFFERENT
 digit's count — invisible in any single cell. Counts merge by
 ADDING, which is not replay-idempotent under foreachBatch's
 at-least-once contract, so this stream uses the delta-partition
-device (streaming/hist_stream.py:1): each micro-batch writes its
-(key, d, n_delta) cell deltas into its own ``batch_id=<id>``
-partition with dynamic overwrite — a replayed batch rewrites the
+device (``_run.write_delta``, as in hist_stream): each micro-batch
+writes its (key, d, n_delta) cell deltas into its own
+``batch_id=<id>`` partition with dynamic overwrite — a replayed batch rewrites the
 same partition bit-for-bit. Readers sum the deltas and push the
 merged lattice through the BATCH operator's own finalize stage
 (operators/benford.py:benford_finalize): identical expression tree
@@ -29,23 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.benford import benford_counts, benford_finalize
-
-#: batch_id of the compacted base partition (real batch ids are >= 0)
-BASE_PARTITION = -1
+from tits_spark.streaming import _run
 
 
 def write_digit_delta(
     batch: DataFrame, table_path: str, batch_id: int, key: str, value: str
 ) -> None:
-    spark = batch.sparkSession
     delta = benford_counts(batch, key, value).select(
-        "key",
-        "d",
-        F.col("n").alias("n_delta"),
-        F.lit(batch_id).alias("batch_id"),
+        "key", "d", F.col("n").alias("n_delta")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    delta.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
+    _run.write_delta(delta, table_path, batch_id)
 
 
 def read_counts(spark: SparkSession, table_path: str) -> DataFrame:
@@ -70,14 +63,9 @@ def compact(spark: SparkSession, table_path: str) -> None:
     """Fold every delta into the base partition. Single-writer: must
     not run concurrently with the stream (maintenance window)."""
     merged = read_counts(spark, table_path).select(
-        "key",
-        "d",
-        F.col("n").alias("n_delta"),
-        F.lit(BASE_PARTITION).alias("batch_id"),
+        "key", "d", F.col("n").alias("n_delta")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    merged.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    _run.compact(merged, table_path)
 
 
 def stream_benford(
@@ -88,7 +76,6 @@ def stream_benford(
     checkpoint: str,
     key: str = "key",
     value: str = "value",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, value) parquet into digit-count deltas; read the
@@ -97,13 +84,5 @@ def stream_benford(
     def upsert(batch: DataFrame, batch_id: int) -> None:
         write_digit_delta(batch, table_path, batch_id, key, value)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, upsert, checkpoint)

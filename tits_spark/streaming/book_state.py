@@ -14,7 +14,9 @@ from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = "t array<double>, v array<double>"
 OUTPUT_SCHEMA = (
@@ -69,10 +71,5 @@ def book_triggers(df, key: str = "key", max_ticks: int = MAX_TICKS,
                   edg_ticks: int = EDG_TICKS):
     """Wire the stateful book over a streaming DataFrame with columns
     (key, t: double, v: double)."""
-    return df.groupBy(key).applyInPandasWithState(
-        make_book_fn(max_ticks, edg_ticks),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run.keyed(df, make_book_fn(max_ticks, edg_ticks), OUTPUT_SCHEMA,
+                      STATE_SCHEMA, key=key)

@@ -11,8 +11,8 @@ marginals R_i, C_j, N).
 
 Counts merge by ADDING, which is not replay-idempotent under
 foreachBatch's at-least-once contract, so this stream uses the
-delta-partition device (streaming/hist_stream.py:1): each micro-batch
-writes its (key, u, v, n_delta) cell deltas into its own
+delta-partition device (``_run.write_delta``, as in hist_stream):
+each micro-batch writes its (key, u, v, n_delta) cell deltas into its own
 ``batch_id=<id>`` partition with dynamic overwrite — a replayed batch
 rewrites the same partition bit-for-bit. Readers sum the deltas and
 push the merged table through the BATCH operator's own finalize stage
@@ -32,16 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.mutual_info import chi2_finalize
-
-#: batch_id of the compacted base partition (real batch ids are >= 0)
-BASE_PARTITION = -1
+from tits_spark.streaming import _run
 
 
 def write_cell_delta(
     batch: DataFrame, table_path: str, batch_id: int, key: str, ts: str,
     cat_col: str,
 ) -> None:
-    spark = batch.sparkSession
     delta = (
         batch.select(
             F.col(key).alias("key"),
@@ -50,10 +47,8 @@ def write_cell_delta(
         )
         .groupBy("key", "u", "v")
         .agg(F.count(F.lit(1)).alias("n_delta"))
-        .withColumn("batch_id", F.lit(batch_id))
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    delta.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
+    _run.write_delta(delta, table_path, batch_id)
 
 
 def read_cells(spark: SparkSession, table_path: str) -> DataFrame:
@@ -76,15 +71,9 @@ def compact(spark: SparkSession, table_path: str) -> None:
     """Fold every delta into the base partition. Single-writer: must
     not run concurrently with the stream (maintenance window)."""
     merged = read_cells(spark, table_path).select(
-        "key",
-        "u",
-        "v",
-        F.col("nuv").cast("long").alias("n_delta"),
-        F.lit(BASE_PARTITION).alias("batch_id"),
+        "key", "u", "v", F.col("nuv").cast("long").alias("n_delta")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    merged.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    _run.compact(merged, table_path)
 
 
 def stream_contingency(
@@ -96,7 +85,6 @@ def stream_contingency(
     key: str = "key",
     ts: str = "ts",
     cat_col: str = "event_type",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, cat) parquet into contingency cell deltas;
@@ -105,13 +93,5 @@ def stream_contingency(
     def upsert(batch: DataFrame, batch_id: int) -> None:
         write_cell_delta(batch, table_path, batch_id, key, ts, cat_col)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, upsert, checkpoint)

@@ -19,7 +19,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = "t0 long, v0 double"
 OUTPUT_SCHEMA = (
@@ -72,34 +74,10 @@ def stream_crossings(
     out_path: str,
     checkpoint: str,
     level: float,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory of (key, ts, value) samples into
     threshold-crossing alert rows."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files (soak harness device,
-        # tools/stream_soak.py: availableNow then drains as many batches)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_crossing_fn(level),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_crossing_fn(level), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

@@ -30,7 +30,9 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 _ALPHA = 0.125
 _NONE = -(2**62)  # "no open bucket" sentinel (ts >= epoch assumed)
@@ -116,33 +118,10 @@ def stream_croston(
     out_path: str,
     checkpoint: str,
     bucket_secs: int = 3600,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) parquet into per-closed-demand-bucket
     Croston state rows; state is six scalars per key."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    stream = (
-        reader.parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_croston_fn(bucket_secs),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_croston_fn(bucket_secs), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

@@ -20,10 +20,10 @@ batch-swept corpora agree document-for-document by construction
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.decontam import decontaminate
+from tits_spark.streaming import _run
 
 
 def stream_decontaminate(
@@ -36,7 +36,6 @@ def stream_decontaminate(
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory of documents, drop every doc sharing
@@ -61,26 +60,9 @@ def stream_decontaminate(
 
     def gate(batch: DataFrame, batch_id: int) -> None:
         # idempotent per-batch commit: replays overwrite, never append
-        batch.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        (
-            decontaminate(batch, benchmark, n, id_col, text_col)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        _run.write_delta(
+            decontaminate(batch, benchmark, n, id_col, text_col), out_path, batch_id
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files (soak harness device,
-        # tools/stream_soak.py: availableNow then drains as many batches)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, gate, checkpoint)

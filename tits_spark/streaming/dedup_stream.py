@@ -23,6 +23,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from tits_spark.streaming import _run
+
 
 def stream_dedup_exact(
     spark: SparkSession,
@@ -33,29 +35,17 @@ def stream_dedup_exact(
     text_col: str = "text",
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory, keep the first-arriving copy of each
     distinct text within the watermark, append survivors to
     ``out_path``. Dedup key is md5(text) — same key as the batch
     ``dedup_exact`` so stream + batch-backstop compose."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     stream = (
-        reader.parquet(source_path)
+        _run.source(spark, source_path, schema, max_files_per_trigger)
         .withColumn("_h", F.md5(F.col(text_col)))
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_h"])
         .drop("_h")
     )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run.to_parquet(stream, out_path, checkpoint)

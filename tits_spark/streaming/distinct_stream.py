@@ -11,7 +11,7 @@ idempotent AND commutative — so foreachBatch's at-least-once replay
 contract gives exactly-once table contents for free (a replayed
 micro-batch re-maxes the same rhos, a no-op). This is strictly
 stronger than the overwrite-by-batch-id device the decontam gate
-needs (streaming/decontam_stream.py:54) — additive sinks would
+needs (``_run.write_delta``) — additive sinks would
 double-count on replay; max-merge cannot.
 
 Write amplification: the table partitions by bucket_date and each
@@ -23,13 +23,12 @@ tier stay maintainable at 10^12 turns.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.rollup_sketch import distinct_registers
+from tits_spark.streaming import _run
 
 
 def merge_registers_batch(
@@ -45,7 +44,7 @@ def merge_registers_batch(
     dates = [r["bucket_date"] for r in new.select("bucket_date").distinct().collect()]
     if not dates:
         return
-    if os.path.exists(table_path):
+    if _run.exists(spark, table_path):
         old = spark.read.parquet(table_path).where(
             F.col("bucket_date").isin(dates)
         )
@@ -55,8 +54,7 @@ def merge_registers_batch(
         .agg(F.max("rho").alias("rho"))
         .select("bucket_ts", "reg", "rho", "bucket_date")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy("bucket_date").parquet(table_path)
+    _run.overwrite_partitions(merged, table_path, "bucket_date")
 
 
 def stream_distinct_registers(
@@ -69,7 +67,6 @@ def stream_distinct_registers(
     p: int = 8,
     ts: str = "ts",
     item: str = "item",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (ts, item, ...) parquet into the per-bucket register
@@ -80,13 +77,5 @@ def stream_distinct_registers(
     def upsert(batch: DataFrame, batch_id: int) -> None:
         merge_registers_batch(batch, table_path, tier, p, ts, item)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, upsert, checkpoint)

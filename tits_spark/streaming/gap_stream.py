@@ -34,6 +34,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from tits_spark.streaming import _run
+
 STATE_SCHEMA = "last_us long"
 OUTPUT_SCHEMA = "key string, gap_start timestamp, gap_end timestamp, gap_sec double"
 
@@ -97,7 +99,6 @@ def stream_gaps(
     checkpoint: str,
     threshold_sec: float,
     stale_timeout_sec: float | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, ...) parquet into gap-alert rows; one double of
@@ -107,30 +108,7 @@ def stream_gaps(
         if stale_timeout_sec is not None
         else GroupStateTimeout.NoTimeout
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files: with availableNow
-        # the backlog then drains as MANY micro-batches (the soak
-        # harness uses this to drive a 50-batch run, tools/stream_soak)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_gap_fn(threshold_sec, stale_timeout_sec),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_gap_fn(threshold_sec, stale_timeout_sec),
+                     OUTPUT_SCHEMA, STATE_SCHEMA, timeout=timeout)
+    return _run.to_parquet(out, out_path, checkpoint)

@@ -24,6 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.guess_lag import guess_lag
 from tits_spark.operators.windows import sliding_last_n
+from tits_spark.streaming import _run
 
 QUOTES_SCHEMA = "ts timestamp, venue string, bid double, ask double"
 
@@ -38,7 +39,6 @@ def stream_guess_lag(
     edg_ticks: int | None = None,
     nlags: int = 64,
     tau: float = 0.01,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     if edg_ticks is None:
@@ -46,10 +46,11 @@ def stream_guess_lag(
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        try:
-            books = sp.read.parquet(books_path)
-            merged = books.unionByName(batch)
-        except Exception:  # noqa: BLE001 — first batch, no books yet
+        # only a missing book table means "first batch": any other read
+        # failure must not silently restart the books from this batch
+        if _run.exists(sp, books_path):
+            merged = sp.read.parquet(books_path).unionByName(batch)
+        else:
             merged = batch
         # compact to the newest max_ticks per (venue, side-ish source row)
         compacted = sliding_last_n(merged, ["venue"], "ts", 2 * max_ticks)
@@ -64,17 +65,5 @@ def stream_guess_lag(
         ).withColumn("batch_id", F.lit(batch_id))
         fired.write.mode("append").parquet(results_path)
 
-    reader = spark.readStream.schema(QUOTES_SCHEMA)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files (soak harness device,
-        # tools/stream_soak.py: availableNow then drains as many batches)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, QUOTES_SCHEMA, max_files_per_trigger)
+    return _run.to_batches(stream, sink, checkpoint)

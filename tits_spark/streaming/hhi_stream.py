@@ -11,7 +11,7 @@ Per-key cent totals merge by ADDING — and additive merges are NOT
 replay-idempotent (foreachBatch is at-least-once: a replayed
 micro-batch would double-count a key's share and tilt the whole
 bucket), so this stream uses hist_stream's device
-(streaming/hist_stream.py:1): each micro-batch writes its (bucket,
+(``_run.write_delta``): each micro-batch writes its (bucket,
 key, s_delta) share DELTA into its own ``batch_id=<id>`` partition
 with dynamic overwrite; a replay rewrites the same partition
 bit-for-bit. Readers sum the deltas and push the merged totals
@@ -29,16 +29,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.functions.exprs import epoch_us, floordiv
 from tits_spark.operators.concentration import _HOUR_US, hhi_finalize
-
-#: batch_id of the compacted base partition (real batch ids are >= 0)
-BASE_PARTITION = -1
+from tits_spark.streaming import _run
 
 
 def write_share_delta(
     batch: DataFrame, table_path: str, batch_id: int, key: str, ts: str,
     value: str, bucket_us: int,
 ) -> None:
-    spark = batch.sparkSession
     cents = F.round(F.col(value) * 100).cast("long")
     delta = (
         batch.select(
@@ -51,10 +48,8 @@ def write_share_delta(
         # a single micro-batch's per-key delta fits int64 by the same
         # bound as the batch operator's emission (concentration.py)
         .agg(F.sum("c").alias("s_delta"))
-        .withColumn("batch_id", F.lit(batch_id))
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    delta.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
+    _run.write_delta(delta, table_path, batch_id)
 
 
 def read_shares(spark: SparkSession, table_path: str) -> DataFrame:
@@ -79,14 +74,9 @@ def compact(spark: SparkSession, table_path: str) -> None:
     """Fold every delta into the base partition. Single-writer: must
     not run concurrently with the stream (maintenance window)."""
     merged = read_shares(spark, table_path).select(
-        "bucket",
-        "key",
-        F.col("s").cast("long").alias("s_delta"),
-        F.lit(BASE_PARTITION).alias("batch_id"),
+        "bucket", "key", F.col("s").cast("long").alias("s_delta")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    merged.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    _run.compact(merged, table_path)
 
 
 def stream_hhi(
@@ -99,7 +89,6 @@ def stream_hhi(
     ts: str = "ts",
     value: str = "value",
     bucket_us: int = _HOUR_US,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) parquet into per-bucket share deltas;
@@ -110,14 +99,5 @@ def stream_hhi(
             batch, table_path, batch_id, key, ts, value, bucket_us
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files (soak harness device)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, upsert, checkpoint)

@@ -9,14 +9,15 @@ for free): each micro-batch writes its histogram DELTA into its own
 ``batch_id=<id>`` partition with dynamic overwrite. A replay rewrites
 the same partition bit-for-bit instead of double-counting — the same
 exactly-once-on-top-of-at-least-once construction as the decontam gate
-(streaming/decontam_stream.py:54).
+(both write through ``_run.write_delta``).
 
 Readers aggregate the deltas (sum over batch_id) — cheap, since each
 delta is at most (buckets x lattice points) rows; :func:`compact`
-folds committed deltas into a single base partition when the delta
-count grows (run it from the maintenance window that owns the table —
-it must not race the writer, same single-writer assumption as the
-register table's dynamic overwrite).
+folds committed deltas into a single base partition
+(``_run.compact``) when the delta count grows (run it from the
+maintenance window that owns the table — it must not race the writer,
+same single-writer assumption as the register table's dynamic
+overwrite).
 """
 
 from __future__ import annotations
@@ -26,22 +27,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.quantiles import value_histogram
-
-#: batch_id of the compacted base partition (real batch ids are >= 0)
-BASE_PARTITION = -1
+from tits_spark.streaming import _run
 
 
 def write_hist_delta(
     batch: DataFrame, table_path: str, batch_id: int, tier_unit: str,
     ts: str, value: str, scale: int,
 ) -> None:
-    spark = batch.sparkSession
     hist = value_histogram(
         batch.select(F.date_trunc(tier_unit, ts).alias("bucket_ts"), value),
         ["bucket_ts"], value, scale,
-    ).withColumn("batch_id", F.lit(batch_id))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    hist.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
+    )
+    _run.write_delta(hist, table_path, batch_id)
 
 
 def read_histogram(spark: SparkSession, table_path: str) -> DataFrame:
@@ -56,13 +53,7 @@ def read_histogram(spark: SparkSession, table_path: str) -> DataFrame:
 def compact(spark: SparkSession, table_path: str) -> None:
     """Fold every delta into the base partition. Single-writer: must
     not run concurrently with the stream (maintenance window)."""
-    merged = read_histogram(spark, table_path).withColumn(
-        "batch_id", F.lit(BASE_PARTITION)
-    )
-    # static overwrite replaces ALL partitions with the single base
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    merged.write.mode("overwrite").partitionBy("batch_id").parquet(table_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    _run.compact(read_histogram(spark, table_path), table_path)
 
 
 def stream_histogram(
@@ -75,7 +66,6 @@ def stream_histogram(
     ts: str = "ts",
     value: str = "value",
     scale: int = 100,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (ts, value, ...) parquet into per-bucket histogram
@@ -85,15 +75,5 @@ def stream_histogram(
     def upsert(batch: DataFrame, batch_id: int) -> None:
         write_hist_delta(batch, table_path, batch_id, tier_unit, ts, value, scale)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bound each micro-batch to N source files (soak harness device,
-        # tools/stream_soak.py: availableNow then drains as many batches)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    return _run.to_batches(stream, upsert, checkpoint)

@@ -22,7 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = (
     "n_seen long, buf array<double>, l double, b double, s array<double>"
@@ -114,32 +116,10 @@ def stream_holt_winters(
     beta: float = 0.3,
     gamma: float = 0.4,
     period: int = 4,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) samples into per-event Holt-Winters
     fitted/level/trend/seasonal rows."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_hw_fn(alpha, beta, gamma, period),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_hw_fn(alpha, beta, gamma, period), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

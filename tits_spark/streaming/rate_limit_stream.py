@@ -20,7 +20,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = "t_us long, b long"
 OUTPUT_SCHEMA = (
@@ -78,31 +80,11 @@ def stream_rate_limit(
     checkpoint: str,
     capacity: int = 2,
     rate_per_hour: int = 1,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory of (key, eid, ts) into per-event
     admission decisions; state is 2 integers per key."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader.parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_rate_limit_fn(capacity, rate_per_hour),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_rate_limit_fn(capacity, rate_per_hour),
+                     OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

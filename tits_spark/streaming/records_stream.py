@@ -24,7 +24,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = "mx double, cnt long, last_us long"
 OUTPUT_SCHEMA = (
@@ -85,31 +87,9 @@ def stream_record_highs(
     schema: str,
     out_path: str,
     checkpoint: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) samples into record-breaking events."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_records_fn(),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_records_fn(), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)

@@ -3,8 +3,9 @@
 The reference processes an unbounded stdin stream with bounded per-key
 state (ref:guess_lag.c:349-352, SURVEY.md §2.10); our batch engine is
 the primary path (continuous aggregates + checkpoint resume), and this
-module is the streaming wrapper: readStream -> watermarked 1m windowed
-aggregation -> foreachBatch append into the same tier layout, so late
+module is the streaming wrapper: file source -> watermarked 1m windowed
+aggregation -> foreachBatch append into the same tier layout (wired by
+streaming/_run.py like every twin), so late
 data within the watermark lands in the right bucket and the downstream
 cascade (1h/1d) stays exact.
 
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.operators.rollup import _raw_aggs
+from tits_spark.streaming import _run
 
 
 def stream_rollup_1m(
@@ -32,7 +34,6 @@ def stream_rollup_1m(
     ts: str = "ts",
     value: str = "value",
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory into the 1m tier.
@@ -43,11 +44,8 @@ def stream_rollup_1m(
     are dropped — the documented streaming trade-off the batch
     checkpoint path does not have.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     stream = (
-        reader.parquet(source_path)
+        _run.source(spark, source_path, schema, max_files_per_trigger)
         .withWatermark(ts, watermark)
         .groupBy(F.col(key).alias("key"), F.window(ts, "1 minute").alias("w"))
         .agg(*_raw_aggs(value, ts))
@@ -65,9 +63,4 @@ def stream_rollup_1m(
             .parquet(f"{out_path}/tier=1m")
         )
 
-    writer = stream.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint
-    ).foreachBatch(sink)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run.to_batches(stream, sink, checkpoint)

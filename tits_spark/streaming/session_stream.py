@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tits_spark.functions.exprs import ts_seconds
+from tits_spark.streaming import _run
 
 
 def stream_session_stats(
@@ -34,18 +35,14 @@ def stream_session_stats(
     value: str = "value",
     gap_seconds: float = 1800.0,
     watermark: str = "0 seconds",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream a parquet directory into per-session stats rows
     (key, n_events, start_ts, end_ts, duration_s, v_sum); append mode
     emits each session exactly once when it closes under the watermark."""
     t = ts_seconds(F.col(ts))
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     stream = (
-        reader.parquet(source_path)
+        _run.source(spark, source_path, schema, max_files_per_trigger)
         .withWatermark(ts, watermark)
         .groupBy(key, F.session_window(ts, f"{int(gap_seconds)} seconds"))
         .agg(
@@ -57,12 +54,4 @@ def stream_session_stats(
         )
         .drop("session_window")
     )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", out_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run.to_parquet(stream, out_path, checkpoint)

@@ -25,7 +25,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from tits_spark.streaming import _run
 
 STATE_SCHEMA = (
     "n long, s long, mr long, prev long, "
@@ -132,31 +134,9 @@ def stream_western_electric(
     out_path: str,
     checkpoint: str,
     baseline_n: int = 50,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream (key, ts, value) ticks into WE zone-rule alert rows."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = (
-        reader
-        .parquet(source_path)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_we_fn(baseline_n),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _run.source(spark, source_path, schema, max_files_per_trigger)
+    out = _run.keyed(stream, make_we_fn(baseline_n), OUTPUT_SCHEMA, STATE_SCHEMA)
+    return _run.to_parquet(out, out_path, checkpoint)
