@@ -329,3 +329,31 @@ def test_legacy_partial_commit_recommits_all_tiers(spark, raw, tmp_path):
     assert recommitted == {(f"tier_{t}", day) for t in TIER_ORDER}
     _tiers_equal(spark, tiers, raw)
     assert verify_lineage(spark, tiers, metrics).filter(~F.col("match")).count() == 0
+
+
+def test_noop_runs_read_the_log_once(spark, raw, tmp_path):
+    """No-op runs pay one committed-state read: with ``backfill`` a
+    rollup submits no more Spark jobs than without (the late-data counts
+    come from the same day scan), and a calendar pass no more than one
+    aggregate over the lineage log."""
+    from tests.test_tier_router import _jobs_in_group
+    from tits_spark.lineage import incremental_calendar
+
+    tiers, metrics = str(tmp_path / "tiers"), str(tmp_path / "metrics")
+    incremental_rollup(spark, raw, tiers, metrics, job_id="a")
+    incremental_calendar(spark, tiers, metrics, unit="month", job_id="a")
+    group = f"noop-{tmp_path.name}"
+    idle = {f"tier_{t}": 0 for t in TIER_ORDER}
+
+    with _jobs_in_group(spark, f"{group}:rollup") as plain:
+        assert incremental_rollup(spark, raw, tiers, metrics) == idle
+    with _jobs_in_group(spark, f"{group}:backfill") as backfill:
+        assert incremental_rollup(spark, raw, tiers, metrics, backfill=True) == idle
+    assert 0 < len(backfill) <= len(plain)
+
+    with _jobs_in_group(spark, f"{group}:log") as one_aggregate:
+        resolve_table_io(spark, tiers, metrics).read_metrics() \
+            .groupBy("stage", "part").count().collect()
+    with _jobs_in_group(spark, f"{group}:calendar") as calendar:
+        assert incremental_calendar(spark, tiers, metrics, unit="month") == {"tier_month": 0}
+    assert 0 < len(calendar) <= len(one_aggregate)

@@ -115,7 +115,12 @@ def test_asof_strategies_on_events(spark):
     assert a.select("key", "ts", "dv_r").exceptAll(b.select("key", "ts", "dv_r")).count() == 0
 
 
-def test_retention_expiry(spark, transcripts, tmp_path):
+def _root(path, uri: bool) -> str:
+    return path.as_uri() if uri else str(path)
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_retention_expiry(spark, transcripts, tmp_path, uri):
     from tits_spark.lineage import incremental_rollup
     from tits_spark.operators.retention import expire_partitions
     from tits_spark.sources.table_io import resolve_table_io
@@ -123,8 +128,8 @@ def test_retention_expiry(spark, transcripts, tmp_path):
     raw = transcripts.select(
         "conv_id", "ts", F.length("text").cast("double").alias("value")
     )
-    tiers = str(tmp_path / "tiers")
-    metrics = str(tmp_path / "metrics")
+    tiers = _root(tmp_path / "tiers", uri)
+    metrics = _root(tmp_path / "metrics", uri)
     incremental_rollup(spark, raw, tiers, metrics, job_id="r")
     days = sorted(
         r["d"] for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
@@ -154,7 +159,8 @@ def test_retention_expiry(spark, transcripts, tmp_path):
     assert gone2["1m"] == []
 
 
-def test_compaction_preserves_content(spark, transcripts, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_compaction_preserves_content(spark, transcripts, tmp_path, uri):
     """Small-file compaction: fewer files, byte-identical content
     (checksum-verified swap), lineage row logged, idempotent."""
     from tits_spark.operators.retention import compact_partitions
@@ -179,8 +185,8 @@ def test_compaction_preserves_content(spark, transcripts, tmp_path):
     assert max(files_before.values()) > 4
 
     before = spark.read.parquet(str(tier_dir)).orderBy("key", "bucket_ts").collect()
-    metrics = str(tmp_path / "metrics")
-    done = compact_partitions(spark, str(tmp_path), metrics, "1h",
+    root, metrics = _root(tmp_path, uri), _root(tmp_path / "metrics", uri)
+    done = compact_partitions(spark, root, metrics, "1h",
                               max_files_per_day=4, target_file_mb=256)
     assert done  # at least one day rewritten
     for day, n_out in done.items():
@@ -188,11 +194,99 @@ def test_compaction_preserves_content(spark, transcripts, tmp_path):
         assert n_files == n_out <= 4
     after = spark.read.parquet(str(tier_dir)).orderBy("key", "bucket_ts").collect()
     assert after == before
-    log = resolve_table_io(spark, str(tmp_path), metrics).read_metrics()
+    log = resolve_table_io(spark, root, metrics).read_metrics()
     assert log.filter(F.col("stage") == "compacted_1h").count() == len(done)
     # idempotent: second pass finds nothing over the threshold
-    assert compact_partitions(spark, str(tmp_path), metrics, "1h",
+    assert compact_partitions(spark, root, metrics, "1h",
                               max_files_per_day=4) == {}
+
+
+def test_expiry_logs_before_it_deletes(spark, transcripts, tmp_path, monkeypatch):
+    """A failed tombstone append deletes nothing: the rerun expires the
+    same days, and every committed day that is gone has its tombstone
+    (verify_lineage is clean)."""
+    from tits_spark.lineage import incremental_rollup, verify_lineage
+    from tits_spark.operators.retention import expire_partitions
+    from tits_spark.sources.table_io import ParquetTableIO
+
+    raw = transcripts.select(
+        "conv_id", "ts", F.length("text").cast("double").alias("value")
+    )
+    tiers, metrics = str(tmp_path / "tiers"), str(tmp_path / "metrics")
+    incremental_rollup(spark, raw, tiers, metrics, job_id="r")
+    as_of = raw.agg(F.max(F.to_date("ts"))).first()[0]
+
+    append = ParquetTableIO.append_metrics
+    calls = []
+
+    def fail_once(self, rows):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("append failed")
+        append(self, rows)
+
+    monkeypatch.setattr(ParquetTableIO, "append_metrics", fail_once)
+    with pytest.raises(OSError, match="append failed"):
+        expire_partitions(spark, tiers, metrics, as_of, ttl_days={"1m": 2})
+    gone = expire_partitions(spark, tiers, metrics, as_of, ttl_days={"1m": 2})
+    assert len(gone["1m"]) > 0
+    assert not any((tmp_path / "tiers" / "tier=1m" / f"bucket_date={d}").exists()
+                   for d in gone["1m"])
+    assert verify_lineage(spark, tiers, metrics).filter(~F.col("match")).count() == 0
+
+
+def test_retention_raises_on_iceberg_location(spark, monkeypatch):
+    """Retention works on the parquet layout only: an Iceberg location
+    raises instead of expiring or compacting nothing."""
+    from tits_spark.operators import retention
+    from tits_spark.sources.table_io import IcebergTableIO
+
+    monkeypatch.setattr(
+        retention, "resolve_table_io",
+        lambda spark, tiers, metrics: IcebergTableIO(spark, tiers, metrics),
+    )
+    with pytest.raises(NotImplementedError, match="Iceberg"):
+        retention.expire_partitions(spark, "cat.db.t", "cat.db.m", dt.date(2026, 3, 1))
+    with pytest.raises(NotImplementedError, match="Iceberg"):
+        retention.compact_partitions(spark, "cat.db.t", "cat.db.m", "1h")
+
+
+def test_retention_job_on_uri_root(spark, transcripts, tmp_path, capsys):
+    """The packaged CLI job (jobs/retention_job.py) on ``file://`` roots
+    expires the days past the TTL, compacts nothing in one-file days,
+    and leaves the lineage clean."""
+    import json
+    import pathlib
+    import sys
+
+    from tits_spark.lineage import incremental_rollup, verify_lineage
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "jobs"))
+    import retention_job
+
+    raw = transcripts.select(
+        "conv_id", "ts", F.length("text").cast("double").alias("value")
+    )
+    tiers, metrics = (tmp_path / "tiers").as_uri(), (tmp_path / "metrics").as_uri()
+    incremental_rollup(spark, raw, tiers, metrics, job_id="r")
+    days = sorted(
+        r["d"] for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:  # the job's get_spark re-applies the engine defaults
+        retention_job.main([
+            "--tiers", tiers, "--metrics", metrics, "--as-of", str(days[-1]),
+            "--ttl", "1m=2", "--compact",
+        ])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    kept = [d for d in days if d >= days[-1] - dt.timedelta(days=2)]
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["expired"] == {"1m": len(days) - len(kept), "1h": 0, "1d": 0}
+    assert out["compacted"] == {"1m": 0, "1h": 0, "1d": 0}
+    left = sorted(p.name for p in (tmp_path / "tiers" / "tier=1m").glob("bucket_date=*"))
+    assert left == [f"bucket_date={d}" for d in kept]
+    assert verify_lineage(spark, tiers, metrics).filter(~F.col("match")).count() == 0
 
 
 def test_asof_nearest_small(sides):

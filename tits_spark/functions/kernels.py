@@ -34,16 +34,15 @@ Every kernel takes ``dtype`` (np.float64 default; np.float32 gives the
 reference's single-precision twins — tits_ssacf/snorm/sxcor/sacf2ar/
 sroots/sperio — including the wider 8-lane truncation).
 
-``sacf``/``xcor`` additionally take ``stats``:
+``sacf``/``xcor`` additionally take ``stats``, as their callers differ:
  - "parity" (default): the lane-order-faithful Welford normalization —
-   bit-compatible with the C build, used by the golden tests;
+   bit-compatible with the C build, used by the golden tests and by
+   ``operators/guess_lag.py``, whose correlograms match the reference;
  - "fast": vectorized two-pass numpy mean/var (ddof=1) — identical to
    ~1e-15 relative, no Python-loop over n/4 blocks. The operators in
-   ``operators/correlate.py`` (sacf/xcor/AR/PACF by key) default to
-   this (their acceptance gate is the 6-dp DuckDB oracle, far above the
+   ``operators/correlate.py`` (sacf/xcor/AR/PACF by key) always use it
+   (their acceptance gate is the 6-dp DuckDB oracle, far above the
    1e-15 difference), keeping the per-series hot path fully vectorized.
-   ``operators/guess_lag.py`` calls ``xcor`` with the "parity" default,
-   so its correlograms match the reference build.
 
 Everything here is plain numpy over contiguous arrays — these functions
 run inside Arrow-batched pandas UDFs (applyInPandas / cogroup /

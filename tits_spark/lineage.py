@@ -2,8 +2,9 @@
 
 Every rollup stage appends per-partition rows
     (job_id, stage, part, input_count, bucket_count, checksum, committed_at)
-to a metrics table; a resumed job anti-joins pending partitions against
-the committed set and re-processes only the gap. Writes are idempotent:
+to a metrics table; a resumed job reads the committed state (the latest
+log row per (stage, part), ``_committed``) and re-processes only the
+days it lacks (``_pending_days``). Writes are idempotent:
 tier data is written with dynamic partition overwrite, so re-running a
 partition replaces it bit-for-bit instead of duplicating.
 
@@ -37,7 +38,7 @@ import datetime as dt
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from tits_spark.operators.rollup import (
@@ -113,27 +114,53 @@ def _commit(
     io.append_metrics(_lineage_rows(written, job_id, stage_prefix, *exprs))
 
 
-def _changed_parts(io, raw: DataFrame, ts: str) -> set[str]:
-    """Committed days whose current raw row count differs from the
-    ``input_count`` of their latest tier_1m lineage row (late data)."""
-    latest_counts = {
-        r["part"]: r["n"]
-        for r in io.read_metrics()
-        .filter(F.col("stage") == "tier_1m")
-        .groupBy("part")
-        .agg(F.max_by("input_count", "committed_at").alias("n"))
-        .collect()
-    }
-    current_counts = {
-        r["day"].strftime("%Y-%m-%d"): r["n"]
-        for r in raw.groupBy(F.to_date(ts).alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+def _committed(io, stages: list[str]) -> dict[tuple[str, str], Row]:
+    """{(stage, part): the ``input_count`` and ``committed_at`` of its
+    latest log row} for ``stages``, from one aggregate over the log: the
+    committed state every writer decides from."""
     return {
-        part for part, n in current_counts.items()
-        if part in latest_counts and latest_counts[part] != n
+        (r["stage"], r["part"]): r
+        for r in io.read_metrics()
+        .where(F.col("stage").isin(stages))
+        .groupBy("stage", "part")
+        .agg(
+            F.max_by("input_count", "committed_at").alias("input_count"),
+            F.max("committed_at").alias("committed_at"),
+        )
+        .collect()
     }
+
+
+def _only(df: DataFrame, part, pending: list, n_parts: int) -> DataFrame:
+    """The rows of ``df`` whose ``part`` is pending; ``df`` itself when all
+    its ``n_parts`` parts are (a per-row filter would drop nothing)."""
+    return df if len(pending) == n_parts else df.filter(part.isin(pending))
+
+
+def _pending_days(
+    io, raw: DataFrame, ts: str, stages: list[str], backfill: bool = False
+) -> tuple[list | None, DataFrame]:
+    """``(days, src)``: the days of ``raw`` that ``stages`` still have to
+    commit, and ``raw`` limited to them (``_only``). ``days`` is None on
+    a fresh run (nothing of ``stages`` committed), which skips the day
+    scan. Otherwise one ``groupBy(to_date(ts)).count()`` gives the
+    present days and their raw row counts; a day is pending when ANY
+    stage lacks its commit (it is recomputed for all of them), or under
+    ``backfill`` when its count differs from the ``input_count`` of its
+    latest ``stages[0]`` row (late data)."""
+    committed = _committed(io, stages)
+    if not committed:
+        return None, raw
+    present = {
+        r["day"]: r["count"]
+        for r in raw.groupBy(F.to_date(ts).alias("day")).count().collect()
+    }
+    pending = sorted(
+        d for d, n in present.items()
+        if any((s, d.isoformat()) not in committed for s in stages)
+        or (backfill and committed[(stages[0], d.isoformat())]["input_count"] != n)
+    )
+    return pending, _only(raw, F.to_date(ts), pending, len(present))
 
 
 def incremental_rollup(
@@ -165,55 +192,28 @@ def incremental_rollup(
     for late ARRIVALS and deletions that change the count; an
     update-in-place that swaps one row for another (count unchanged)
     is invisible to this probe — pass the affected days explicitly by
-    deleting their lineage rows if that ever matters. Costs one raw
-    count aggregate; the rewrite itself is the same idempotent
-    dynamic-partition overwrite as resume, and verify_lineage compares
-    against the LATEST committed checksum (max_by committed_at), so
-    backfilled partitions verify clean.
+    deleting their lineage rows if that ever matters. It costs no extra
+    Spark job: the counts come from the same day scan that finds the
+    present days (``_pending_days``). The rewrite itself is the same
+    idempotent dynamic-partition overwrite as resume, and verify_lineage
+    compares against the LATEST committed checksum (max_by
+    committed_at), so backfilled partitions verify clean.
     """
     job_id = job_id or uuid.uuid4().hex[:12]
     io = resolve_table_io(spark, tiers_path, metrics_path)
-
-    committed_all = {
-        (r["stage"], r["part"])
-        for r in io.read_metrics().select("stage", "part").distinct().collect()
-    }
-    # fresh run: nothing committed, every day is pending — skip the
-    # day-discovery scan of the input entirely
-    pending_days = present_days = None
-    if committed_all:
-        # one scan: the set of day-partitions present in the input
-        present_days = sorted(
-            r["day"]
-            for r in raw.select(F.to_date(ts).alias("day")).distinct().collect()
-        )
-        changed_parts = _changed_parts(io, raw, ts) if backfill else set()
-        # a day pending in ANY tier (e.g. a log written by an older
-        # per-tier protocol that crashed between tiers) is recomputed
-        # for all three
-        pending_days = [
-            d for d in present_days
-            if d.strftime("%Y-%m-%d") in changed_parts
-            or any((f"tier_{t}", d.strftime("%Y-%m-%d")) not in committed_all
-                   for t in TIER_ORDER)
-        ]
-        if not pending_days:
-            return {f"tier_{t}": 0 for t in TIER_ORDER}
-
-    # when every present day is pending, skip the per-row day membership
-    # filter (a full column evaluation over the raw scan for no
-    # selectivity)
-    full = pending_days is None or len(pending_days) == len(present_days)
-    src = raw if full else raw.filter(F.to_date(ts).isin(pending_days))
+    stages = [f"tier_{t}" for t in TIER_ORDER]
+    days, src = _pending_days(io, raw, ts, stages, backfill)
+    if days == []:
+        return dict.fromkeys(stages, 0)
     # 1h and 1d derive from the 1m aggregate inside the same plan: exact
     # (associative aggregates, nested buckets), and raw is scanned once
     m1 = rollup_from_raw(src, key, ts, value, "1m")
     frames = {t: m1 if t == "1m" else rollup_cascade(m1, t) for t in TIER_ORDER}
-    _commit(io, frames, job_id, pending_days)
-    if pending_days is None:
+    _commit(io, frames, job_id, days)
+    if days is None:
         # day count from the written partition directories (no scan)
         return {f"tier_{t}": io.tier_partition_count(t) for t in TIER_ORDER}
-    return {f"tier_{t}": len(pending_days) for t in TIER_ORDER}
+    return dict.fromkeys(stages, len(days))
 
 
 def _cal_start(day: dt.date, unit: str) -> dt.date:
@@ -256,45 +256,28 @@ def incremental_calendar(
     stage = f"tier_{unit}"
     job_id = job_id or uuid.uuid4().hex[:12]
     io = resolve_table_io(spark, tiers_path, metrics_path)
-    log = io.read_metrics()
+    committed = _committed(io, ["tier_1d", stage])
 
-    day_commits = {
-        r["part"]: r["at"]
-        for r in log
-        .filter(F.col("stage") == "tier_1d")
-        .groupBy("part")
-        .agg(F.max("committed_at").alias("at"))
-        .collect()
-    }
-    cal_commits = {
-        r["part"]: r["at"]
-        for r in log
-        .filter(F.col("stage") == stage)
-        .groupBy("part")
-        .agg(F.max("committed_at").alias("at"))
-        .collect()
-    }
+    buckets: set[dt.date] = set()
     pending: set[dt.date] = set()
-    for day_str, at in day_commits.items():
-        start = _cal_start(dt.date.fromisoformat(day_str), unit)
-        prev = cal_commits.get(start.isoformat())
-        if prev is None or at > prev:
+    for (s, part), r in committed.items():
+        if s != "tier_1d":
+            continue
+        start = _cal_start(dt.date.fromisoformat(part), unit)
+        buckets.add(start)
+        prev = committed.get((stage, start.isoformat()))
+        if prev is None or r["committed_at"] > prev["committed_at"]:
             pending.add(start)
     if not pending:
         return {stage: 0}
 
-    day_tier = io.read_tier("1d").drop("bucket_date")
-    full = len(pending) >= len(
-        {_cal_start(dt.date.fromisoformat(d), unit) for d in day_commits}
+    parts = sorted(pending)
+    src = _only(
+        io.read_tier("1d").drop("bucket_date"),
+        F.date_trunc(unit, "bucket_ts").cast("date"), parts, len(buckets),
     )
-    src = day_tier if full else day_tier.filter(
-        F.date_trunc(unit, "bucket_ts").cast("date").isin(sorted(pending))
-    )
-    _commit(
-        io, {unit: rollup_cascade(src, unit)}, job_id,
-        None if full else sorted(pending),
-    )
-    return {stage: len(pending)}
+    _commit(io, {unit: rollup_cascade(src, unit)}, job_id, parts)
+    return {stage: len(parts)}
 
 
 def verify_lineage(spark: SparkSession, tiers_path: str, metrics_path: str) -> DataFrame:
@@ -394,7 +377,7 @@ def read_tier_as_of(
 
     The committed-parts frame is tiny (one row per day) and broadcast,
     so Spark's dynamic partition pruning keeps the scan to exactly the
-    visible ``bucket_date=`` directories.
+    visible day directories.
     """
     io = resolve_table_io(spark, tiers_path, metrics_path)
     m = io.read_metrics().filter(F.col("stage") == f"tier_{tier}")
@@ -452,26 +435,20 @@ def incremental_sketches(
     Same exactness argument as incremental_rollup: buckets nest in
     days, so day-scoped resume is exact; writes are idempotent dynamic
     partition overwrites and a partition is visible iff its lineage row
-    committed. Returns {stage: n_partitions_processed}.
+    committed. A day pending in either sketch stage (a crash between
+    the two commits) is rebuilt in both. Returns
+    {stage: n_partitions_processed}.
     """
     from tits_spark.operators.quantiles import value_histogram
     from tits_spark.operators.rollup_sketch import distinct_registers
 
     job_id = job_id or uuid.uuid4().hex[:12]
     io = resolve_table_io(spark, tiers_path, metrics_path)
-    processed: dict[str, int] = {}
+    days, src = _pending_days(io, raw, ts, list(SKETCH_STAGES))
+    if days == []:
+        return dict.fromkeys(SKETCH_STAGES, 0)
 
-    committed_all = {
-        (r["stage"], r["part"])
-        for r in io.read_metrics().select("stage", "part").distinct().collect()
-        if r["stage"] in SKETCH_STAGES
-    }
-    present_days = sorted(
-        r["day"]
-        for r in raw.select(F.to_date(ts).alias("day")).distinct().collect()
-    )
-
-    def build(stage: str, src: DataFrame) -> DataFrame:
+    def build(stage: str) -> DataFrame:
         if stage == "hll_1m":
             return distinct_registers(
                 src.select(ts, F.col(item).cast("string").alias("_it")),
@@ -483,16 +460,7 @@ def incremental_sketches(
         )
 
     for stage, exprs in SKETCH_STAGES.items():
-        pending = [
-            d for d in present_days
-            if (stage, d.strftime("%Y-%m-%d")) not in committed_all
-        ]
-        if not pending:
-            processed[stage] = 0
-            continue
-        full = len(pending) == len(present_days)
-        src = raw if full else raw.filter(F.to_date(ts).isin(pending))
-        _commit(io, {stage: build(stage, src)}, job_id,
-                None if full else pending, exprs, stage_prefix="")
-        processed[stage] = len(pending)
-    return processed
+        _commit(io, {stage: build(stage)}, job_id, days, exprs, stage_prefix="")
+    if days is None:
+        return {s: io.tier_partition_count(s) for s in SKETCH_STAGES}
+    return dict.fromkeys(SKETCH_STAGES, len(days))

@@ -57,20 +57,19 @@ def sacf_by_key(
     nlags: int = 10,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """Per-key kernel-weighted sample ACF -> rows (key, lag, acf),
     lag = 1..nlags on the tau grid. ref:sacf.c:185-226.
 
-    ``stats="fast"`` (default) uses the vectorized two-pass
-    normalization (== C-parity Welford to ~1e-15, far below the 6-dp
-    oracle gate); pass "parity" for bit-compatible normalization."""
+    Every operator here normalizes with the kernels' vectorized
+    ``stats="fast"`` two-pass (== C-parity Welford to ~1e-15, far below
+    the 6-dp oracle gate)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < min_points:
             return pd.DataFrame(columns=["key", "lag", "acf"])
         t, y = _series(pdf, ts, value)
-        acf = K.sacf(t, y, nlags, tau, stats=stats)
+        acf = K.sacf(t, y, nlags, tau, stats="fast")
         return pd.DataFrame({
             "key": pdf[key].iloc[0],
             "lag": np.arange(1, nlags + 1, dtype=np.int32),
@@ -88,7 +87,6 @@ def sacf_by_key_batched(
     nlags: int = 10,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """Same result as sacf_by_key, but batched: keys are hash-clustered
     and sorted within partitions, then mapInPandas processes MANY series
@@ -123,7 +121,7 @@ def sacf_by_key_batched(
                 if e - s < min_points:
                     continue
                 t = t_all[s:e]
-                acfs.append(K.sacf(t - t[0], v_all[s:e], nlags, tau, stats=stats))
+                acfs.append(K.sacf(t - t[0], v_all[s:e], nlags, tau, stats="fast"))
                 keys_out.append(k_arr[s])
             if acfs:
                 n = len(acfs)
@@ -158,7 +156,6 @@ def xcor_pairs(
     nlags: int = 10,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """Kernel-weighted XCF for each (key1, key2) row of ``pairs`` ->
     rows (key1, key2, lag, xcf), lag = -nlags..+nlags. ref:xcor.c:185-238.
@@ -195,7 +192,7 @@ def xcor_pairs(
         xcf = K.xcor(
             t1.astype(np.float64) - tref, l["value"].to_numpy(np.float64),
             t2.astype(np.float64) - tref, r["value"].to_numpy(np.float64),
-            nlags, tau, stats=stats,
+            nlags, tau, stats="fast",
         )
         return pd.DataFrame({
             "key1": l["key1"].iloc[0],
@@ -219,7 +216,6 @@ def ar_fit_by_key(
     order: int = 4,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """Per-key AR(order) fit: sacf -> Levinson-Durbin -> rows
     (key, coef_idx, ar). ref:acf24ar.c:48-80 (Q3 composed with Q1)."""
@@ -228,7 +224,7 @@ def ar_fit_by_key(
         if len(pdf) < min_points:
             return pd.DataFrame(columns=["key", "coef_idx", "ar"])
         t, y = _series(pdf, ts, value)
-        acf = K.sacf(t, y, order, tau, stats=stats)
+        acf = K.sacf(t, y, order, tau, stats="fast")
         if np.isnan(acf).any():
             return pd.DataFrame(columns=["key", "coef_idx", "ar"])
         ar = K.acf2ar(acf, order)
@@ -249,7 +245,6 @@ def pacf_by_key(
     order: int = 4,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """Per-key partial autocorrelation at lags 1..order: sacf -> the
     Levinson reflection coefficients (Q1 composed with the Q3 recursion,
@@ -264,7 +259,7 @@ def pacf_by_key(
         if len(pdf) < min_points:
             return pd.DataFrame(columns=["key", "lag", "pacf"])
         t, y = _series(pdf, ts, value)
-        acf = K.sacf(t, y, order, tau, stats=stats)
+        acf = K.sacf(t, y, order, tau, stats="fast")
         if np.isnan(acf).any():
             return pd.DataFrame(columns=["key", "lag", "pacf"])
         pacf = K.acf2pacf(acf, order)
@@ -286,7 +281,6 @@ def ar_stationarity_by_key(
     order: int = 4,
     tau: float = 1.0,
     min_points: int = 8,
-    stats: str = "fast",
 ) -> DataFrame:
     """AR(order) fit + stationarity check: roots of the AR
     characteristic polynomial 1 + a1 z + ... + ap z^p must lie outside
@@ -300,7 +294,7 @@ def ar_stationarity_by_key(
         if len(pdf) < min_points:
             return pd.DataFrame(columns=cols)
         t, y = _series(pdf, ts, value)
-        acf = K.sacf(t, y, order, tau, stats=stats)
+        acf = K.sacf(t, y, order, tau, stats="fast")
         if np.isnan(acf).any():
             return pd.DataFrame(columns=cols)
         ar = K.acf2ar(acf, order)

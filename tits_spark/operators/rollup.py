@@ -237,7 +237,7 @@ def read_resolution(
     calendar: tuple = (),
 ) -> DataFrame:
     """Read the right tier for a time range + target resolution.
-    Only the tier's ``bucket_date=`` directories from ``start.date()``
+    Only the tier's day directories from ``start.date()``
     to ``end.date()`` are read, listed through Hadoop with the schema
     taken from a file footer, so building the frame submits no Spark
     job (``table_io.read_tier``); the bucket_date predicates still

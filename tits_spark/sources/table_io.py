@@ -38,10 +38,12 @@ spark-submit jobs are storage-agnostic:
    is visible iff its lineage row exists — exactly-once on top of
    idempotent overwrites); on Iceberg each append is a table commit.
 
-This module is the only owner of the tier layout: rows are clustered
-onto (tier, bucket_date) before every tier write, so each day's file is
-written whole by one task — no tasks-x-dates sliver files (measured
-3.6x slower at bench scale, and pathological at 10^12 turns).
+This module is the only owner of the tier layout (retention goes
+through ``_fs``/``_day_dirs``; only the streaming 1m sink writes its
+own): rows are clustered onto (tier, bucket_date) before every tier
+write, so each day's file is written whole by one task — no
+tasks-x-dates sliver files (measured 3.6x slower at bench scale, and
+pathological at 10^12 turns).
 """
 
 from __future__ import annotations
@@ -106,13 +108,14 @@ class ParquetTableIO:
         path = self.spark._jvm.org.apache.hadoop.fs.Path
         return path, path(location).getFileSystem(self.spark._jsc.hadoopConfiguration())
 
-    def _day_dirs(self, tier: str) -> list[str]:
-        """Paths of the tier's ``bucket_date=<d>`` directories, from one
-        Hadoop FileSystem glob (no Spark job)."""
+    def _day_dirs(self, tier: str) -> dict[str, str]:
+        """{day: path} of the tier's ``bucket_date=<day>`` directories in
+        day order, from one Hadoop FileSystem glob (no Spark job)."""
         path, fs = self._fs(self.tiers_root)
         found = fs.globStatus(path(f"{self.tiers_root}/tier={tier}/bucket_date=*"))
         base = f"{self.tiers_root}/tier={tier}"
-        return [] if found is None else [f"{base}/{s.getPath().getName()}" for s in found]
+        names = sorted(s.getPath().getName() for s in found or [])
+        return {n.split("=", 1)[1]: f"{base}/{n}" for n in names}
 
     def _footer_schema(self, dirs: list[str]) -> StructType | None:
         """The row schema Spark's writer stored in the footer of the
@@ -143,14 +146,14 @@ class ParquetTableIO:
         listing and inference, which raises on a missing tier."""
         base = f"{self.tiers_root}/tier={tier}"
         dirs = self._day_dirs(tier)
-        schema = self._footer_schema(dirs)
+        schema = self._footer_schema(list(dirs.values()))
         if schema is None:
             return self.spark.read.parquet(base)
         schema.add("bucket_date", DateType())
         keep = [
-            d for d in dirs
-            if (first_day is None or d.rsplit("=", 1)[1] >= str(first_day))
-            and (last_day is None or d.rsplit("=", 1)[1] <= str(last_day))
+            d for day, d in dirs.items()
+            if (first_day is None or day >= str(first_day))
+            and (last_day is None or day <= str(last_day))
         ]
         if not keep:
             return self.spark.createDataFrame([], schema)
